@@ -290,18 +290,11 @@ object Bench {
     }.mkString("{", ",", "}")
     val total = results.values.sum
 
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
-    val errsJson = errors.map { case (k, v) => jstr(k) + ":" + jstr(v) }
+    val errsJson = errors.map { case (k, v) => Json.str(k) + ":" + Json.str(v) }
       .mkString("{", ",", "}")
 
-    val prevRef = prevPath.map(jstr).getOrElse("null")
-    val refsJson = refs.map { case (label, _) => jstr(label) }
+    val prevRef = prevPath.map(Json.str).getOrElse("null")
+    val refsJson = refs.map { case (label, _) => Json.str(label) }
       .mkString("[", ",", "]")
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","ingestion":{"text_mbps":$textBest,"thrift_mbps":$thriftBest},"contention_retries":$rt,"isolated_rechecks":$rechecksJson,"prev_bench":$prevRef,"recheck_refs":$refsJson,"errors":$errsJson}"""

@@ -58,7 +58,6 @@ object GraftMain {
     }
     val log = org.slf4j.LoggerFactory.getLogger(getClass)
     val storeRoots = dataSpecs.map(graft.streaming.DataPipelines.storeRoot)
-    def escJson(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
     val monitor = new Thread(() => {
       try while (true) {
         Thread.sleep(monitorIntervalMs)
@@ -77,9 +76,9 @@ object GraftMain {
           heartbeat.foreach { emit =>
             storeRoots.foreach { case (name, root) =>
               graft.streaming.MaintenanceLease.status(spark, root).foreach { ls =>
-                emit(s"""{"event":"maintenance","store":"${escJson(name)}",""" +
-                  s""""op":"${escJson(ls.op)}","acquiredAtMs":${ls.acquiredAtMs},""" +
-                  s""""renewedAgeMs":${ls.renewedAgeMs},"host":"${escJson(ls.host)}"}""")
+                emit(s"""{"event":"maintenance","store":${Json.str(name)},""" +
+                  s""""op":${Json.str(ls.op)},"acquiredAtMs":${ls.acquiredAtMs},""" +
+                  s""""renewedAgeMs":${ls.renewedAgeMs},"host":${Json.str(ls.host)}}""")
               }
             }
           }

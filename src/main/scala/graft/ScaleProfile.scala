@@ -165,17 +165,9 @@ object ScaleProfile {
   private def w29Stages(spark: SparkSession, dir: String): Unit = {
     println(s"=== w29 stages @ $dir")
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val tmp = System.getProperty("java.io.tmpdir")
-    val tag = "profile_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val bmPath = s"$tmp/graft_w29p_bm25_$tag"
-    val pkPath = s"$tmp/graft_w29p_packed_$tag"
-    val ivPath = s"$tmp/graft_w29p_ivf_$tag"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI("file:///"), spark.sessionState.newHadoopConf())
-    Seq(bmPath, pkPath, ivPath, pkPath + ".compacting",
-      pkPath + ".compacting.COMMITTED").foreach { p =>
-      fs.delete(new org.apache.hadoop.fs.Path(p), true); ()
-    }
+    val bmPath = StoreGate.fresh(spark, "w29p_bm25", "profile_" + dir)
+    val pkPath = StoreGate.fresh(spark, "w29p_packed", "profile_" + dir)
+    val ivPath = StoreGate.fresh(spark, "w29p_ivf", "profile_" + dir)
     val curated = timed("curate (exact dedup + checkpoint)") {
       docs.join(
         docs.groupBy(md5(col("text")).as("dg")).agg(min("doc_id").as("doc_id"))
@@ -186,29 +178,20 @@ object ScaleProfile {
       operators.Vocab.encode(curated, operators.Vocab.build(curated, size = 256))
         .select(col("doc_id"), col("token_ids")).localCheckpoint(true)
     }
-    val n = docs.agg(max("doc_id")).head.getLong(0) + 1
-    val span = n / 3 + 1
+    // stages run one after another here (the gate overlaps them), so
+    // each stopwatch reads one stage alone
+    val parts = StoreGate.epochs(docs, "doc_id", 3)
     timed("bm25 + packed epoch builds (x3)") {
-      (0L until 3L).foreach { e =>
-        val lo = e * span; val hi = (e + 1) * span
-        streaming.StreamingBm25.appendEpoch(
-          curated.filter(col("doc_id") >= lo && col("doc_id") < hi), bmPath, e)
-        sources.PackedCorpus.writeEpoch(
-          enc.filter(col("doc_id") >= lo && col("doc_id") < hi), pkPath, e)
+      parts.zipWithIndex.foreach { case (in, e) =>
+        streaming.StreamingBm25.appendEpoch(curated.filter(in), bmPath, e)
+        sources.PackedCorpus.writeEpoch(enc.filter(in), pkPath, e)
       }
     }
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     timed("ivf init + epoch builds (x3)") {
-      streaming.StreamingIvf.init(
-        emb.filter(col("vec_id") < 8)
-          .select(col("vec_id").cast("int").as("centroid_id"),
-            col("embedding").as("centroid_vec")), ivPath)
-      val m = emb.agg(max("vec_id")).head.getLong(0) + 1
-      val mspan = m / 3 + 1
-      (0L until 3L).foreach { e =>
-        streaming.StreamingIvf.appendEpoch(
-          emb.filter(col("vec_id") >= e * mspan && col("vec_id") < (e + 1) * mspan),
-          ivPath, e)
+      val ch = StoreGate.ivfInit(emb, ivPath)
+      StoreGate.epochs(emb, "vec_id", 3).zipWithIndex.foreach { case (in, e) =>
+        streaming.StreamingIvf.appendEpoch(emb.filter(in), ivPath, e, centsOpt = ch)
       }
     }
     timed("compact bm25 (postings + stats)") {
@@ -216,10 +199,7 @@ object ScaleProfile {
     }
     timed("compact ivf corpus") { streaming.StreamingIvf.compact(spark, ivPath) }
     timed("compact packed corpus") { sources.PackedCorpus.compact(spark, pkPath) }
-    val qs = curated.filter(pmod(col("doc_id"), lit(97)) === 0)
-      .select(col("doc_id").as("query_id"),
-        concat_ws(" ", slice(split(trim(lower(col("text"))), "\\s+"), 1, 6))
-          .as("text"))
+    val qs = StoreGate.bm25Queries(curated)
     timed("bm25 probe (k=10)") {
       streaming.StreamingBm25.search(spark, bmPath, qs, k = 10)
         .queryExecution.toRdd.count()

@@ -697,8 +697,7 @@ object SparkEntry {
       // pattern for a fact⋈dim join repeated across a pipeline: pay the
       // bucketing once at write time, never shuffle on read. The write is
       // idempotent (overwrite) and part of the measured op.
-      val wh = s"${System.getProperty("java.io.tmpdir")}/graft_q48_" +
-        d.replaceAll("[^A-Za-z0-9.]", "_")
+      val wh = StoreGate.root("q48", d)
       t(s, d, "customer").write.mode("overwrite")
         .option("path", s"$wh/customer").bucketBy(8, "c_custkey")
         .sortBy("c_custkey").saveAsTable("graft_q48_customer")
@@ -1153,7 +1152,7 @@ object SparkEntry {
       // embedded commas/quotes), explicit read schema — NO inference pass,
       // which at 100 TB would be a second full scan before the real one.
       // Doubles survive textually (Java Double.toString round-trips).
-      val out = s"${System.getProperty("java.io.tmpdir")}/graft_s16_csv"
+      val out = StoreGate.root("s16_csv", d)
       t(s, d, "orders").filter(col("o_orderkey") < 2000)
         .select(col("o_orderkey"), col("o_orderstatus"),
           concat(col("o_orderpriority"), lit(",\"q\"")).as("tricky"),
@@ -1169,7 +1168,7 @@ object SparkEntry {
       // XML sink → source round-trip (Spark 4 ships the XML source in
       // core): rowTag framing, explicit read schema — same no-inference
       // stance as s16/CSV (schema inference is a second full scan).
-      val out = s"${System.getProperty("java.io.tmpdir")}/graft_s19_xml"
+      val out = StoreGate.root("s19_xml", d)
       t(s, d, "nation")
         .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
         .write.mode("overwrite").option("rowTag", "nation").format("xml").save(out)
@@ -1187,7 +1186,7 @@ object SparkEntry {
       // unified schema explicitly (spark.read.schema(...)) and pay nothing;
       // the oracle's CASE mirror derives the same relation from the base
       // table.
-      val out = s"${System.getProperty("java.io.tmpdir")}/graft_s20_evo"
+      val out = StoreGate.root("s20_evo", d)
       val docs = t(s, d, "documents")
       docs.filter(col("doc_id") % 2 === 0).select(col("doc_id"), col("source"))
         .write.mode("overwrite").parquet(s"$out/epoch=0")
@@ -1228,64 +1227,30 @@ object SparkEntry {
           .select("doc_id"),
         Seq("doc_id"), "left_semi")
         .localCheckpoint(true)
-      val tmp = System.getProperty("java.io.tmpdir")
-      val tag = d.replaceAll("[^A-Za-z0-9.]", "_")
-      val bmPath = s"$tmp/graft_w29_bm25_$tag"
-      val pkPath = s"$tmp/graft_w29_packed_$tag"
-      val ivPath = s"$tmp/graft_w29_ivf_$tag"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI("file:///"), s.sessionState.newHadoopConf())
-      // compaction renames directories, so a re-run must start from a
-      // clean tree (epoch overwrite alone cannot undo a prior epoch=-1);
-      // the packed STAGING and COMMIT-MARKER siblings live OUTSIDE
-      // pkPath — clear them too, or a killed prior run's orphan marker
-      // reads as a torn swap and recover() rightly throws (the bm25/ivf
-      // markers live INSIDE their store roots, so deleting those roots
-      // already clears them)
-      (Seq(bmPath, pkPath, ivPath, pkPath + ".compacting",
-        pkPath + ".compacting.COMMITTED")).foreach { p =>
-        fs.delete(new org.apache.hadoop.fs.Path(p), true); ()
-      }
+      // compaction renames directories, so every run starts from clean
+      // roots (epoch overwrite alone cannot undo a prior epoch=-1)
+      val bmPath = StoreGate.fresh(s, "w29_bm25", d)
+      val pkPath = StoreGate.fresh(s, "w29_packed", d)
+      val ivPath = StoreGate.fresh(s, "w29_ivf", d)
       val enc = graft.operators.Vocab
         .encode(curated, graft.operators.Vocab.build(curated, size = 256))
         .select(col("doc_id"), col("token_ids"))
         .localCheckpoint(true)
-      val n = docs.agg(max("doc_id")).head.getLong(0) + 1
-      val span = n / 3 + 1
+      val parts = StoreGate.epochs(docs, "doc_id", 3)
       val emb = t(s, d, "embeddings")
       // the three stores share no state (different roots, no session-conf
       // mutation): build and compact them as OVERLAPPED chains — one
-      // driver thread per store, epochs within a store stay ordered (the
-      // per-store write-intent marker). Guide §2.6: concurrent jobs
-      // back-fill each other's task tails AND overlap the per-job
-      // Catalyst/scheduling floor that dominates these small maintenance
-      // writes (round 17).
+      // thread per store. Concurrent jobs back-fill each other's task
+      // tails AND overlap the per-job Catalyst/scheduling floor that
+      // dominates these small maintenance writes.
       graft.operators.Overlap.chains(
-        () => (0L until 3L).foreach { e =>
-          val lo = e * span; val hi = (e + 1) * span
-          graft.streaming.StreamingBm25.appendEpoch(
-            curated.filter(col("doc_id") >= lo && col("doc_id") < hi), bmPath, e)
+        () => StoreGate.build(parts) { (e, in) =>
+          graft.streaming.StreamingBm25.appendEpoch(curated.filter(in), bmPath, e)
         },
-        () => (0L until 3L).foreach { e =>
-          val lo = e * span; val hi = (e + 1) * span
-          graft.sources.PackedCorpus.writeEpoch(
-            enc.filter(col("doc_id") >= lo && col("doc_id") < hi), pkPath, e)
+        () => StoreGate.build(parts) { (e, in) =>
+          graft.sources.PackedCorpus.writeEpoch(enc.filter(in), pkPath, e)
         },
-        () => {
-          val centsDf = emb.filter(col("vec_id") < 8)
-            .select(col("vec_id").cast("int").as("centroid_id"),
-              col("embedding").as("centroid_vec"))
-          graft.streaming.StreamingIvf.init(centsDf, ivPath)
-          // one quantizer handle for the whole build (round 17)
-          val ch = Some(graft.operators.Similarity.collectCentroids(centsDf))
-          val m = emb.agg(max("vec_id")).head.getLong(0) + 1
-          val mspan = m / 3 + 1
-          (0L until 3L).foreach { e =>
-            graft.streaming.StreamingIvf.appendEpoch(
-              emb.filter(col("vec_id") >= e * mspan && col("vec_id") < (e + 1) * mspan),
-              ivPath, e, centsOpt = ch)
-          }
-        })
+        () => StoreGate.ivfBuild(emb, ivPath, 3))
       // the maintenance step under test — independent per store, overlapped
       graft.operators.Overlap.chains(
         () => graft.streaming.StreamingBm25.compact(s, bmPath),
@@ -1294,15 +1259,11 @@ object SparkEntry {
       // structural proof the answers below come from compacted state
       Seq(s"$bmPath/postings", s"$bmPath/stats", s"$ivPath/corpus", pkPath)
         .foreach { p =>
-          val subs = fs.listStatus(new org.apache.hadoop.fs.Path(p))
-            .filter(_.isDirectory).map(_.getPath.getName).toSet
+          val subs = StoreGate.subdirs(s, p)
           require(subs == Set("epoch=-1"),
             s"$p not fully compacted: ${subs.mkString(",")}")
         }
-      val qs = curated.filter(pmod(col("doc_id"), lit(97)) === 0)
-        .select(col("doc_id").as("query_id"),
-          concat_ws(" ", slice(split(trim(lower(col("text"))), "\\s+"), 1, 6))
-            .as("text"))
+      val qs = StoreGate.bm25Queries(curated)
       // the two probes read different stores — overlapped (guide §2.6)
       val probes = graft.operators.Overlap.chains(
         () => graft.streaming.StreamingBm25.search(s, bmPath, qs, k = 10)
@@ -1335,16 +1296,10 @@ object SparkEntry {
       val enc = graft.operators.Vocab
         .encode(docs, graft.operators.Vocab.build(docs, size = 256))
         .select(col("doc_id"), col("token_ids"))
-      val dir = s"${System.getProperty("java.io.tmpdir")}/graft_w28_packed_" +
-        d.replaceAll("[^A-Za-z0-9.]", "_")
-      val n = docs.agg(max("doc_id")).head.getLong(0) + 1
-      val span = n / 3 + 1
-      // packed epochs write disjoint epoch dirs under their own
-      // write-intent markers — overlapped (guide §2.6, round 17)
-      graft.operators.Overlap.chains((0L until 3L).map(e => () =>
-        graft.sources.PackedCorpus.writeEpoch(
-          enc.filter(col("doc_id") >= e * span && col("doc_id") < (e + 1) * span),
-          dir, e)): _*)
+      val dir = StoreGate.fresh(s, "w28_packed", d)
+      StoreGate.build(StoreGate.epochs(docs, "doc_id", 3)) { (e, in) =>
+        graft.sources.PackedCorpus.writeEpoch(enc.filter(in), dir, e)
+      }
       graft.sources.PackedCorpus.readAll(s, dir)
         .select(col("doc_id"),
           size(col("token_ids")).cast("long").as("n_tokens"),
@@ -1367,28 +1322,16 @@ object SparkEntry {
       val enc = graft.operators.Vocab
         .encode(docs, graft.operators.Vocab.build(docs, size = 256))
         .select(col("doc_id"), col("token_ids"))
-      val dir = s"${System.getProperty("java.io.tmpdir")}/graft_w35_ptomb_" +
-        d.replaceAll("[^A-Za-z0-9.]", "_")
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI("file:///"), s.sessionState.newHadoopConf())
-      // compaction renames directories: a re-run must start from a clean
-      // tree (the swap's staging/marker siblings live under dir too)
-      fs.delete(new org.apache.hadoop.fs.Path(dir), true)
-      fs.delete(new org.apache.hadoop.fs.Path(dir + ".compacting"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(dir + ".compacting.COMMITTED"), false)
-      val n = docs.agg(max("doc_id")).head.getLong(0) + 1
-      val span = n / 2 + 1
-      graft.sources.PackedCorpus.writeEpoch(
-        enc.filter(col("doc_id") < span), dir, 0)
-      graft.sources.PackedCorpus.writeEpoch(
-        enc.filter(col("doc_id") >= span), dir, 1)
+      val dir = StoreGate.fresh(s, "w35_ptomb", d)
+      StoreGate.build(StoreGate.epochs(docs, "doc_id", 2)) { (e, in) =>
+        graft.sources.PackedCorpus.writeEpoch(enc.filter(in), dir, e)
+      }
       graft.sources.PackedCorpus.deleteEpoch(
         docs.filter(pmod(col("doc_id"), lit(13)) === 0).select("doc_id"), dir, 0)
       graft.sources.PackedCorpus.compact(s, dir)
-      require(fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-        .filter(_.isDirectory).map(_.getPath.getName).toSet == Set("epoch=-1"),
+      require(StoreGate.subdirs(s, dir) == Set("epoch=-1"),
         "the corpus must hold only the compacted epoch")
-      require(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/tombstones")),
+      require(!StoreGate.exists(s, s"$dir/tombstones"),
         "compaction must retire the applied tombstone store")
       graft.sources.PackedCorpus.readAll(s, dir)
         .select(col("doc_id"),
@@ -1411,8 +1354,7 @@ object SparkEntry {
       val enc = graft.operators.Vocab
         .encode(docs, graft.operators.Vocab.build(docs, size = 256))
         .select(col("doc_id"), col("token_ids"))
-      val dir = s"${System.getProperty("java.io.tmpdir")}/graft_s22_packed_" +
-        d.replaceAll("[^A-Za-z0-9.]", "_")
+      val dir = StoreGate.fresh(s, "s22_packed", d)
       graft.sources.PackedCorpus.write(enc, dir)
       graft.sources.PackedCorpus.read(s, dir)
         .select(col("doc_id"),
@@ -1434,12 +1376,8 @@ object SparkEntry {
       // full text — n_copies counts dups, the row count catches loss, and
       // n_chars catches torn/truncated frames.
       import java.nio.file.{Files => JFiles, Paths => JPaths, StandardOpenOption}
-      val base = JPaths.get(System.getProperty("java.io.tmpdir"),
-        "graft_s21_" + d.replaceAll("[^A-Za-z0-9.]", "_"))
-      def rmrf(p: java.nio.file.Path): Unit = if (JFiles.exists(p))
-        JFiles.walk(p).sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => { JFiles.deleteIfExists(f); () })
-      rmrf(base) // bench runs the query twice — each run starts clean
+      // bench runs the query twice — each run starts clean
+      val base = JPaths.get(StoreGate.fresh(s, "s21", d))
       val logDir = base.resolve("logs"); val cp = base.resolve("cp")
       val outDir = base.resolve("out")
       JFiles.createDirectories(logDir)
@@ -1493,7 +1431,7 @@ object SparkEntry {
       // format (Spark ships the ORC reader/writer natively). Predicate
       // pushdown and column pruning work the same as parquet — the oracle
       // recomputes the expected rows from the parquet original.
-      val out = s"${System.getProperty("java.io.tmpdir")}/graft_s17_orc"
+      val out = StoreGate.root("s17_orc", d)
       t(s, d, "lineitem").filter(col("l_orderkey") < 500)
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
           col("l_extendedprice"), col("l_returnflag"))
@@ -1509,7 +1447,7 @@ object SparkEntry {
       // 100 TB prefer zstd/bzip2 or many rotated files, never one giant gz).
       // Round-trip: serialize orders to log lines, write gz, re-ingest,
       // parse back with the TextLine transform surface.
-      val out = s"${System.getProperty("java.io.tmpdir")}/graft_s18_gz"
+      val out = StoreGate.root("s18_gz", d)
       t(s, d, "orders").filter(col("o_orderkey") < 3000)
         .select(concat_ws("|", col("o_orderkey"), col("o_orderstatus"),
           col("o_totalprice")).as("value"))
@@ -2057,10 +1995,7 @@ object SparkEntry {
       // every doc_id % 97 == 0 doc's first 6 tokens; score rounded to 4
       // digits BEFORE ranking (the tie contract — see Bm25.topK).
       val docs = t(s, d, "documents")
-      val qs = docs.filter(pmod(col("doc_id"), lit(97)) === 0)
-        .select(col("doc_id").as("query_id"),
-          concat_ws(" ", slice(split(trim(lower(col("text"))), "\\s+"), 1, 6))
-            .as("text"))
+      val qs = StoreGate.bm25Queries(docs)
       graft.operators.Bm25.topK(docs, qs, k = 10)
         .orderBy("query_id", "rank")
     }),
@@ -2071,10 +2006,7 @@ object SparkEntry {
       // the standard RAG hybrid. Fusion work is rank-list-sized at any
       // corpus scale (see Hybrid.rrfFuse).
       val docs = t(s, d, "documents")
-      val qs = docs.filter(pmod(col("doc_id"), lit(97)) === 0)
-        .select(col("doc_id").as("query_id"),
-          concat_ws(" ", slice(split(trim(lower(col("text"))), "\\s+"), 1, 6))
-            .as("text"))
+      val qs = StoreGate.bm25Queries(docs)
       val bm = graft.operators.Bm25.topK(docs, qs, k = 10)
       val jc = graft.operators.Hybrid.jaccardTopK(docs, qs, k = 10)
       graft.operators.Hybrid.rrfFuse(Seq(bm, jc), topK = 10)
@@ -2089,11 +2021,7 @@ object SparkEntry {
       // re-measure was ~2.2x). Eval/query suites do not grow with the
       // corpus in deployment — this row is that shape.
       val docs = t(s, d, "documents")
-      val qs = docs.filter(pmod(col("doc_id"), lit(97)) === 0 &&
-          col("doc_id") < 4850)
-        .select(col("doc_id").as("query_id"),
-          concat_ws(" ", slice(split(trim(lower(col("text"))), "\\s+"), 1, 6))
-            .as("text"))
+      val qs = StoreGate.bm25Queries(docs.filter(col("doc_id") < 4850))
       graft.operators.Bm25.topK(docs, qs, k = 10)
         .orderBy("query_id", "rank")
     }),
@@ -2101,11 +2029,7 @@ object SparkEntry {
       // e31's FIXED-QUERY-SET sibling (see e32): hybrid RRF fusion with a
       // corpus-independent query set.
       val docs = t(s, d, "documents")
-      val qs = docs.filter(pmod(col("doc_id"), lit(97)) === 0 &&
-          col("doc_id") < 4850)
-        .select(col("doc_id").as("query_id"),
-          concat_ws(" ", slice(split(trim(lower(col("text"))), "\\s+"), 1, 6))
-            .as("text"))
+      val qs = StoreGate.bm25Queries(docs.filter(col("doc_id") < 4850))
       val bm = graft.operators.Bm25.topK(docs, qs, k = 10)
       val jc = graft.operators.Hybrid.jaccardTopK(docs, qs, k = 10)
       graft.operators.Hybrid.rrfFuse(Seq(bm, jc), topK = 10)
@@ -2121,11 +2045,7 @@ object SparkEntry {
       // back; nothing touches the corpus. Corpus-independent fixed
       // query set (the e32/e33 10x stance).
       val docs = t(s, d, "documents")
-      val qs = docs.filter(pmod(col("doc_id"), lit(97)) === 0 &&
-          col("doc_id") < 4850)
-        .select(col("doc_id").as("query_id"),
-          concat_ws(" ", slice(split(trim(lower(col("text"))), "\\s+"), 1, 6))
-            .as("text"))
+      val qs = StoreGate.bm25Queries(docs.filter(col("doc_id") < 4850))
       val bm = graft.operators.Bm25.topK(docs, qs, k = 10)
       val jc = graft.operators.Hybrid.jaccardTopK(docs, qs, k = 10)
       graft.operators.Hybrid.weightedFuse(Seq(bm -> 0.7, jc -> 0.3),
@@ -2144,46 +2064,19 @@ object SparkEntry {
       // both probes see the same query set.
       val docs = t(s, d, "documents")
       val emb = t(s, d, "embeddings")
-      val qids = docs.join(emb.select(col("vec_id").as("doc_id")), "doc_id")
-        .filter(pmod(col("doc_id"), lit(97)) === 0)
-      val qsText = qids.select(col("doc_id").as("query_id"),
-        concat_ws(" ", slice(split(trim(lower(col("text"))), "\\s+"), 1, 6))
-          .as("text"))
-      val qsVec = emb.join(qids.select(col("doc_id").as("vec_id")), "vec_id")
-      val bmPath = s"${System.getProperty("java.io.tmpdir")}/graft_w37_bm_" +
-        d.replaceAll("[^A-Za-z0-9.]", "_")
-      val ivPath = s"${System.getProperty("java.io.tmpdir")}/graft_w37_iv_" +
-        d.replaceAll("[^A-Za-z0-9.]", "_")
+      val qsText = StoreGate.bm25Queries(
+        docs.join(emb.select(col("vec_id").as("doc_id")), "doc_id"))
+      val qsVec = emb.join(qsText.select(col("query_id").as("vec_id")), "vec_id")
+      val bmPath = StoreGate.fresh(s, "w37_bm", d)
+      val ivPath = StoreGate.fresh(s, "w37_iv", d)
       // the two stores share no state: build them (and run their probes)
       // as overlapped chains — guide §2.6 (round 17). The ivf chain also
       // publishes the one quantizer handle the probes reuse (safe: set
       // before the chain join, read after — join is the memory barrier).
       var ivCents: Option[Seq[(Int, Array[Double])]] = None
       graft.operators.Overlap.chains(
-        () => {
-          val n = docs.agg(max("doc_id")).head.getLong(0) + 1
-          val span = n / 2 + 1
-          (0L until 2L).foreach { e =>
-            graft.streaming.StreamingBm25.appendEpoch(
-              docs.filter(col("doc_id") >= e * span && col("doc_id") < (e + 1) * span),
-              bmPath, e)
-          }
-        },
-        () => {
-          val cents = emb.filter(col("vec_id") < 8)
-            .select(col("vec_id").cast("int").as("centroid_id"),
-              col("embedding").as("centroid_vec"))
-          graft.streaming.StreamingIvf.init(cents, ivPath)
-          // one quantizer handle for build + probe (round 17)
-          ivCents = Some(graft.operators.Similarity.collectCentroids(cents))
-          val nv = emb.agg(max("vec_id")).head.getLong(0) + 1
-          val vspan = nv / 2 + 1
-          (0L until 2L).foreach { e =>
-            graft.streaming.StreamingIvf.appendEpoch(
-              emb.filter(col("vec_id") >= e * vspan && col("vec_id") < (e + 1) * vspan),
-              ivPath, e, centsOpt = ivCents)
-          }
-        })
+        () => StoreGate.bm25Build(docs, bmPath, 2),
+        () => { ivCents = StoreGate.ivfBuild(emb, ivPath, 2) })
       val probes = graft.operators.Overlap.chains(
         () => graft.streaming.StreamingBm25.search(s, bmPath, qsText, k = 10),
         () => graft.streaming.StreamingIvf.search(s, ivPath, qsVec,
@@ -2201,30 +2094,14 @@ object SparkEntry {
       // Results are bucket-count INVARIANT — the post-rebucket search
       // must equal w27's oracle verbatim, probed at the new count.
       val docs = t(s, d, "documents")
-      val qs = docs.filter(pmod(col("doc_id"), lit(97)) === 0)
-        .select(col("doc_id").as("query_id"),
-          concat_ws(" ", slice(split(trim(lower(col("text"))), "\\s+"), 1, 6))
-            .as("text"))
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_w39_rebkt_" +
-        d.replaceAll("[^A-Za-z0-9.]", "_")
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI("file:///"), s.sessionState.newHadoopConf())
-      // the swap renames the postings root: re-runs start from a clean tree
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
-      fs.delete(new org.apache.hadoop.fs.Path(path + "/postings.compacting"), true)
-      val n = docs.agg(max("doc_id")).head.getLong(0) + 1
-      val span = n / 2 + 1
-      (0L until 2L).foreach { e =>
-        graft.streaming.StreamingBm25.appendEpoch(
-          docs.filter(col("doc_id") >= e * span && col("doc_id") < (e + 1) * span),
-          path, e, nBuckets = 64)
-      }
+      val qs = StoreGate.bm25Queries(docs)
+      // the swap renames the postings root: every run starts clean
+      val path = StoreGate.fresh(s, "w39_rebkt", d)
+      StoreGate.bm25Build(docs, path, 2) // at the default 64 buckets
       graft.streaming.StreamingBm25.rebucket(s, path, nBuckets = 16)
-      require(fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/postings"))
-        .filter(_.isDirectory).map(_.getPath.getName).toSet == Set("epoch=-1"),
+      require(StoreGate.subdirs(s, s"$path/postings") == Set("epoch=-1"),
         "rebucket must leave only the re-routed epoch")
-      require(fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/postings/epoch=-1"))
-        .filter(_.isDirectory).map(_.getPath.getName)
+      require(StoreGate.subdirs(s, s"$path/postings/epoch=-1")
         .forall(b => b.stripPrefix("bucket=").toLong < 16),
         "every re-routed bucket must sit under the new count")
       graft.streaming.StreamingBm25.search(s, path, qs, k = 10, nBuckets = 16)
@@ -2243,26 +2120,16 @@ object SparkEntry {
       // VERBATIM: the refused epoch lands after release, so one lost
       // write or one zombie promote breaks the hash.
       val docs = t(s, d, "documents")
-      val qs = docs.filter(pmod(col("doc_id"), lit(97)) === 0)
-        .select(col("doc_id").as("query_id"),
-          concat_ws(" ", slice(split(trim(lower(col("text"))), "\\s+"), 1, 6))
-            .as("text"))
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_w40_lease_" +
-        d.replaceAll("[^A-Za-z0-9.]", "_")
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI("file:///"), s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
-      fs.delete(graft.streaming.MaintenanceLease.leasePath(path), false)
-      val n = docs.agg(max("doc_id")).head.getLong(0) + 1
-      val span = n / 3 + 1
-      def epoch(e: Long): Unit = graft.streaming.StreamingBm25.appendEpoch(
-        docs.filter(col("doc_id") >= e * span && col("doc_id") < (e + 1) * span),
-        path, e)
-      epoch(0); epoch(1)
+      val qs = StoreGate.bm25Queries(docs)
+      val path = StoreGate.fresh(s, "w40_lease", d)
+      val parts = StoreGate.epochs(docs, "doc_id", 3)
+      def epoch(e: Long, in: org.apache.spark.sql.Column): Unit =
+        graft.streaming.StreamingBm25.appendEpoch(docs.filter(in), path, e)
+      StoreGate.build(parts.take(2))(epoch)
       // a maintenance writer holds the lease: concurrent writes refuse
       val held = graft.streaming.MaintenanceLease.acquire(s, path)
       val appendRefused =
-        try { epoch(2); false }
+        try { epoch(2, parts(2)); false }
         catch { case _: IllegalStateException => true }
       val deleteRefused =
         try {
@@ -2287,7 +2154,7 @@ object SparkEntry {
         "maintenance must refuse to start over an in-flight epoch write")
       // a zombie run fenced out by a lease takeover aborts PRE-commit
       val zombie = graft.streaming.MaintenanceLease.acquire(s, path)
-      fs.delete(graft.streaming.MaintenanceLease.leasePath(path), false)
+      StoreGate.fs(s).delete(graft.streaming.MaintenanceLease.leasePath(path), false)
       val taker = graft.streaming.MaintenanceLease.acquire(s, path)
       val fenced =
         try {
@@ -2300,10 +2167,9 @@ object SparkEntry {
       require(fenced, "a fenced-out zombie must abort before the commit marker")
       graft.streaming.MaintenanceLease.release(s, path, taker)
       // the refused epoch lands now; the legitimate compact folds all three
-      epoch(2)
+      epoch(2, parts(2))
       graft.streaming.StreamingBm25.compact(s, path)
-      require(fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/postings"))
-        .filter(_.isDirectory).map(_.getPath.getName).toSet == Set("epoch=-1"),
+      require(StoreGate.subdirs(s, s"$path/postings") == Set("epoch=-1"),
         "the legitimate compact must fold every epoch")
       graft.streaming.StreamingBm25.search(s, path, qs, k = 10)
         .orderBy("query_id", "rank")
@@ -2326,56 +2192,19 @@ object SparkEntry {
       //     un-debited stat, or un-purged vector breaks the hash.
       val docs = t(s, d, "documents")
       val emb = t(s, d, "embeddings")
-      val qids = docs.join(emb.select(col("vec_id").as("doc_id")), "doc_id")
-        .filter(pmod(col("doc_id"), lit(97)) === 0)
-      val qsText = qids.select(col("doc_id").as("query_id"),
-        concat_ws(" ", slice(split(trim(lower(col("text"))), "\\s+"), 1, 6))
-          .as("text"))
-      val qsVec = emb.join(qids.select(col("doc_id").as("vec_id")), "vec_id")
-      val bmPath = s"${System.getProperty("java.io.tmpdir")}/graft_w41_bm_" +
-        d.replaceAll("[^A-Za-z0-9.]", "_")
-      val ivPath = s"${System.getProperty("java.io.tmpdir")}/graft_w41_iv_" +
-        d.replaceAll("[^A-Za-z0-9.]", "_")
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI("file:///"), s.sessionState.newHadoopConf())
-      // forget+compact MUTATE the stores: re-runs need a clean tree
-      // (forget ledger included — it accumulates across runs by design)
-      Seq(bmPath, ivPath).foreach { p =>
-        fs.delete(new org.apache.hadoop.fs.Path(p), true)
-        fs.delete(new org.apache.hadoop.fs.Path(
-          graft.streaming.ForgetLedger.ledgerDir(p)), true)
-        fs.delete(graft.streaming.MaintenanceLease.leasePath(p), false)
-      }
+      val qsText = StoreGate.bm25Queries(
+        docs.join(emb.select(col("vec_id").as("doc_id")), "doc_id"))
+      val qsVec = emb.join(qsText.select(col("query_id").as("vec_id")), "vec_id")
+      val bmPath = StoreGate.fresh(s, "w41_bm", d)
+      val ivPath = StoreGate.fresh(s, "w41_iv", d)
       // the two stores share no state: build them as overlapped chains —
       // guide §2.6 (round 17). The ivf chain also publishes the one
       // quantizer handle the probes reuse (set before the chain join,
       // read after — join is the memory barrier).
       var ivCents: Option[Seq[(Int, Array[Double])]] = None
       graft.operators.Overlap.chains(
-        () => {
-          val n = docs.agg(max("doc_id")).head.getLong(0) + 1
-          val span = n / 2 + 1
-          (0L until 2L).foreach { e =>
-            graft.streaming.StreamingBm25.appendEpoch(
-              docs.filter(col("doc_id") >= e * span && col("doc_id") < (e + 1) * span),
-              bmPath, e)
-          }
-        },
-        () => {
-          val cents = emb.filter(col("vec_id") < 8)
-            .select(col("vec_id").cast("int").as("centroid_id"),
-              col("embedding").as("centroid_vec"))
-          graft.streaming.StreamingIvf.init(cents, ivPath)
-          // one quantizer handle for build + probes (round 17)
-          ivCents = Some(graft.operators.Similarity.collectCentroids(cents))
-          val nv = emb.agg(max("vec_id")).head.getLong(0) + 1
-          val vspan = nv / 2 + 1
-          (0L until 2L).foreach { e =>
-            graft.streaming.StreamingIvf.appendEpoch(
-              emb.filter(col("vec_id") >= e * vspan && col("vec_id") < (e + 1) * vspan),
-              ivPath, e, centsOpt = ivCents)
-          }
-        })
+        () => StoreGate.bm25Build(docs, bmPath, 2),
+        () => { ivCents = StoreGate.ivfBuild(emb, ivPath, 2) })
       // victims: the ivf rank-1 neighbor of the two smallest queries —
       // guaranteed to sit at a fused list's strongest rank
       val ivPre = graft.streaming.StreamingIvf.search(s, ivPath, qsVec,
@@ -2411,7 +2240,7 @@ object SparkEntry {
         () => graft.streaming.StreamingBm25.compact(s, bmPath),
         () => graft.streaming.StreamingIvf.compact(s, ivPath))
       Seq(bmPath, ivPath).foreach { p =>
-        require(!fs.exists(new org.apache.hadoop.fs.Path(s"$p/tombstones")),
+        require(!StoreGate.exists(s, s"$p/tombstones"),
           s"compact must retire the applied tombstones at $p")
       }
       graft.streaming.StreamingHybrid.rrfSearch(
@@ -2432,25 +2261,9 @@ object SparkEntry {
       // one lost byte, un-restored stat row, or manifest miss breaks
       // the hash.
       val docs = t(s, d, "documents")
-      val qs = docs.filter(pmod(col("doc_id"), lit(97)) === 0)
-        .select(col("doc_id").as("query_id"),
-          concat_ws(" ", slice(split(trim(lower(col("text"))), "\\s+"), 1, 6))
-            .as("text"))
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_w42_snap_" +
-        d.replaceAll("[^A-Za-z0-9.]", "_")
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI("file:///"), s.sessionState.newHadoopConf())
-      Seq(path, graft.SnapshotTool.snapshotsDir(path),
-          graft.streaming.ForgetLedger.ledgerDir(path)).foreach(p =>
-        fs.delete(new org.apache.hadoop.fs.Path(p), true))
-      fs.delete(graft.streaming.MaintenanceLease.leasePath(path), false)
-      val n = docs.agg(max("doc_id")).head.getLong(0) + 1
-      val span = n / 2 + 1
-      (0L until 2L).foreach { e =>
-        graft.streaming.StreamingBm25.appendEpoch(
-          docs.filter(col("doc_id") >= e * span && col("doc_id") < (e + 1) * span),
-          path, e)
-      }
+      val qs = StoreGate.bm25Queries(docs)
+      val path = StoreGate.fresh(s, "w42_snap", d)
+      StoreGate.bm25Build(docs, path, 2)
       // the snapshot copy and the victim probe both READ the quiesced
       // store (the snapshot writes only to the sibling snapshots dir, and
       // searches take no lease) — overlapped, guide §2.6 (round 17)
@@ -2506,25 +2319,9 @@ object SparkEntry {
       // replay (w27's oracle verbatim); the mid-gate requires pin the
       // masked state.
       val docs = t(s, d, "documents")
-      val qs = docs.filter(pmod(col("doc_id"), lit(97)) === 0)
-        .select(col("doc_id").as("query_id"),
-          concat_ws(" ", slice(split(trim(lower(col("text"))), "\\s+"), 1, 6))
-            .as("text"))
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_w44_ledger_" +
-        d.replaceAll("[^A-Za-z0-9.]", "_")
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI("file:///"), s.sessionState.newHadoopConf())
-      Seq(path, graft.SnapshotTool.snapshotsDir(path),
-          graft.streaming.ForgetLedger.ledgerDir(path)).foreach(p =>
-        fs.delete(new org.apache.hadoop.fs.Path(p), true))
-      fs.delete(graft.streaming.MaintenanceLease.leasePath(path), false)
-      val n = docs.agg(max("doc_id")).head.getLong(0) + 1
-      val span = n / 2 + 1
-      (0L until 2L).foreach { e =>
-        graft.streaming.StreamingBm25.appendEpoch(
-          docs.filter(col("doc_id") >= e * span && col("doc_id") < (e + 1) * span),
-          path, e)
-      }
+      val qs = StoreGate.bm25Queries(docs)
+      val path = StoreGate.fresh(s, "w44_ledger", d)
+      StoreGate.bm25Build(docs, path, 2)
       // snapshot copy and victim probe are both reads — overlapped
       // (guide §2.6, round 17; the w42 stance)
       val pre = graft.operators.Overlap.chains[Any](
@@ -2579,29 +2376,15 @@ object SparkEntry {
       // verbatim): one file restored from the wrong source tree, one
       // stale pointer, or one lost base byte breaks the hash.
       val docs = t(s, d, "documents")
-      val qs = docs.filter(pmod(col("doc_id"), lit(97)) === 0)
-        .select(col("doc_id").as("query_id"),
-          concat_ws(" ", slice(split(trim(lower(col("text"))), "\\s+"), 1, 6))
-            .as("text"))
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_w45_incsnap_" +
-        d.replaceAll("[^A-Za-z0-9.]", "_")
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI("file:///"), s.sessionState.newHadoopConf())
-      Seq(path, graft.SnapshotTool.snapshotsDir(path),
-          graft.streaming.ForgetLedger.ledgerDir(path)).foreach(p =>
-        fs.delete(new org.apache.hadoop.fs.Path(p), true))
-      fs.delete(graft.streaming.MaintenanceLease.leasePath(path), false)
-      val n = docs.agg(max("doc_id")).head.getLong(0) + 1
-      val span = n / 3 + 1
-      (0L until 2L).foreach { e =>
-        graft.streaming.StreamingBm25.appendEpoch(
-          docs.filter(col("doc_id") >= e * span && col("doc_id") < (e + 1) * span),
-          path, e)
+      val qs = StoreGate.bm25Queries(docs)
+      val path = StoreGate.fresh(s, "w45_incsnap", d)
+      val parts = StoreGate.epochs(docs, "doc_id", 3)
+      StoreGate.build(parts.take(2)) { (e, in) =>
+        graft.streaming.StreamingBm25.appendEpoch(docs.filter(in), path, e)
       }
       graft.SnapshotTool.snapshot(s, path, "base")
       // one more epoch lands — the only delta the incremental should copy
-      graft.streaming.StreamingBm25.appendEpoch(
-        docs.filter(col("doc_id") >= 2L * span), path, 2L)
+      graft.streaming.StreamingBm25.appendEpoch(docs.filter(parts(2)), path, 2L)
       // incremental-snapshot copy and victim probe are both reads —
       // overlapped (guide §2.6, round 17; the w42 stance)
       val pre = graft.operators.Overlap.chains[Any](
@@ -2649,46 +2432,19 @@ object SparkEntry {
       // embedding).
       val docs = t(s, d, "documents")
       val emb = t(s, d, "embeddings")
-      val qids = docs.join(emb.select(col("vec_id").as("doc_id")), "doc_id")
-        .filter(pmod(col("doc_id"), lit(97)) === 0)
-      val qsText = qids.select(col("doc_id").as("query_id"),
-        concat_ws(" ", slice(split(trim(lower(col("text"))), "\\s+"), 1, 6))
-          .as("text"))
-      val qsVec = emb.join(qids.select(col("doc_id").as("vec_id")), "vec_id")
-      val bmPath = s"${System.getProperty("java.io.tmpdir")}/graft_w43_bm_" +
-        d.replaceAll("[^A-Za-z0-9.]", "_")
-      val ivPath = s"${System.getProperty("java.io.tmpdir")}/graft_w43_iv_" +
-        d.replaceAll("[^A-Za-z0-9.]", "_")
+      val qsText = StoreGate.bm25Queries(
+        docs.join(emb.select(col("vec_id").as("doc_id")), "doc_id"))
+      val qsVec = emb.join(qsText.select(col("query_id").as("vec_id")), "vec_id")
+      val bmPath = StoreGate.fresh(s, "w43_bm", d)
+      val ivPath = StoreGate.fresh(s, "w43_iv", d)
       // the two stores share no state: build them as overlapped chains —
       // guide §2.6 (round 17). The ivf chain also publishes the one
       // quantizer handle the probe reuses (set before the chain join,
       // read after — join is the memory barrier).
       var ivCents: Option[Seq[(Int, Array[Double])]] = None
       graft.operators.Overlap.chains(
-        () => {
-          val n = docs.agg(max("doc_id")).head.getLong(0) + 1
-          val span = n / 2 + 1
-          (0L until 2L).foreach { e =>
-            graft.streaming.StreamingBm25.appendEpoch(
-              docs.filter(col("doc_id") >= e * span && col("doc_id") < (e + 1) * span),
-              bmPath, e)
-          }
-        },
-        () => {
-          val cents = emb.filter(col("vec_id") < 8)
-            .select(col("vec_id").cast("int").as("centroid_id"),
-              col("embedding").as("centroid_vec"))
-          graft.streaming.StreamingIvf.init(cents, ivPath)
-          // one quantizer handle for build + probe (round 17)
-          ivCents = Some(graft.operators.Similarity.collectCentroids(cents))
-          val nv = emb.agg(max("vec_id")).head.getLong(0) + 1
-          val vspan = nv / 2 + 1
-          (0L until 2L).foreach { e =>
-            graft.streaming.StreamingIvf.appendEpoch(
-              emb.filter(col("vec_id") >= e * vspan && col("vec_id") < (e + 1) * vspan),
-              ivPath, e, centsOpt = ivCents)
-          }
-        })
+        () => StoreGate.bm25Build(docs, bmPath, 2),
+        () => { ivCents = StoreGate.ivfBuild(emb, ivPath, 2) })
       graft.streaming.StreamingHybrid.weightedSearch(
           s, bmPath, ivPath, qsText, qsVec, k = 10, topK = 10, nProbe = 2,
           ivCents = ivCents)
@@ -2704,22 +2460,9 @@ object SparkEntry {
       // cross-epoch carry: a query term's df and the corpus N/avgdl span
       // all three epochs, so per-epoch scoring would rank differently.
       val docs = t(s, d, "documents")
-      val qs = docs.filter(pmod(col("doc_id"), lit(97)) === 0)
-        .select(col("doc_id").as("query_id"),
-          concat_ws(" ", slice(split(trim(lower(col("text"))), "\\s+"), 1, 6))
-            .as("text"))
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_w27_bm25_" +
-        d.replaceAll("[^A-Za-z0-9.]", "_")
-      val n = docs.agg(max("doc_id")).head.getLong(0) + 1
-      val span = n / 3 + 1
-      def epochW(e: Long): Unit = graft.streaming.StreamingBm25.appendEpoch(
-        docs.filter(col("doc_id") >= e * span && col("doc_id") < (e + 1) * span),
-        path, e)
-      // epoch 0 seeds the store metadata (_NBUCKETS exclusive create);
-      // the later epochs write disjoint epoch dirs under their own
-      // write-intent markers — overlapped (guide §2.6, round 17)
-      epochW(0)
-      graft.operators.Overlap.chains(() => epochW(1), () => epochW(2))
+      val qs = StoreGate.bm25Queries(docs)
+      val path = StoreGate.fresh(s, "w27_bm25", d)
+      StoreGate.bm25Build(docs, path, 3)
       graft.streaming.StreamingBm25.search(s, path, qs, k = 10)
         .orderBy("query_id", "rank")
     }),
@@ -2733,34 +2476,17 @@ object SparkEntry {
       // docs — one wrong df, un-debited stat, or surviving posting row
       // breaks the hash. Structural requires pin post-compaction state.
       val docs = t(s, d, "documents")
-      val qs = docs.filter(pmod(col("doc_id"), lit(97)) === 0)
-        .select(col("doc_id").as("query_id"),
-          concat_ws(" ", slice(split(trim(lower(col("text"))), "\\s+"), 1, 6))
-            .as("text"))
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_w34_bmtomb_" +
-        d.replaceAll("[^A-Za-z0-9.]", "_")
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI("file:///"), s.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
-      val n = docs.agg(max("doc_id")).head.getLong(0) + 1
-      val span = n / 3 + 1
-      def epochW(e: Long): Unit = graft.streaming.StreamingBm25.appendEpoch(
-        docs.filter(col("doc_id") >= e * span && col("doc_id") < (e + 1) * span),
-        path, e)
-      // epoch 0 seeds the store metadata (_NBUCKETS exclusive create);
-      // the later epochs write disjoint epoch dirs under their own
-      // write-intent markers — overlapped (guide §2.6, round 17)
-      epochW(0)
-      graft.operators.Overlap.chains(() => epochW(1), () => epochW(2))
+      val qs = StoreGate.bm25Queries(docs)
+      val path = StoreGate.fresh(s, "w34_bmtomb", d)
+      StoreGate.bm25Build(docs, path, 3)
       graft.streaming.StreamingBm25.deleteEpoch(
         docs.filter(pmod(col("doc_id"), lit(17)) === 0).select("doc_id"), path, 0)
       graft.streaming.StreamingBm25.compact(s, path)
       Seq(s"$path/postings", s"$path/stats").foreach { p =>
-        require(fs.listStatus(new org.apache.hadoop.fs.Path(p))
-          .filter(_.isDirectory).map(_.getPath.getName).toSet == Set("epoch=-1"),
+        require(StoreGate.subdirs(s, p) == Set("epoch=-1"),
           s"$p must hold only the compacted epoch")
       }
-      require(!fs.exists(new org.apache.hadoop.fs.Path(s"$path/tombstones")),
+      require(!StoreGate.exists(s, s"$path/tombstones"),
         "compaction must clear the applied tombstone store")
       graft.streaming.StreamingBm25.search(s, path, qs, k = 10)
         .orderBy("query_id", "rank")
@@ -3029,8 +2755,7 @@ object SparkEntry {
       val feed2 = feed1.withColumn("c_acctbal",
         when(pmod(col("c_custkey"), lit(5)) === 0, col("c_acctbal") + 50)
           .otherwise(col("c_acctbal")))
-      val dir = s"${System.getProperty("java.io.tmpdir")}/graft_d65_" +
-        d.replaceAll("[^A-Za-z0-9.]", "_")
+      val dir = StoreGate.fresh(s, "d65", d)
       graft.streaming.StreamingDimension.init(current, dir)
       graft.streaming.StreamingDimension.applyEpoch(feed1, dir, "c_custkey",
         Seq("c_acctbal"), lit("2024-06-01").cast("timestamp"))
@@ -3063,8 +2788,7 @@ object SparkEntry {
             .otherwise(col("c_acctbal")))
         .drop("c_nationkey")
         .join(t(s, d, "customer").select("c_custkey", "c_mktsegment"), "c_custkey")
-      val dir = s"${System.getProperty("java.io.tmpdir")}/graft_d85_" +
-        d.replaceAll("[^A-Za-z0-9.]", "_")
+      val dir = StoreGate.fresh(s, "d85", d)
       graft.streaming.StreamingDimension.init(current, dir)
       graft.streaming.StreamingDimension.applyEpoch(feed1, dir, "c_custkey",
         Seq("c_acctbal"), lit("2024-06-01").cast("timestamp"))
@@ -3200,8 +2924,7 @@ object SparkEntry {
       // rerun discipline would otherwise pay the write per measurement).
       val srcFile = JPaths.get(d, "documents.parquet")
       val fp = s"${JFiles.size(srcFile)}_${JFiles.getLastModifiedTime(srcFile).toMillis}"
-      val base = JPaths.get(System.getProperty("java.io.tmpdir"),
-        "graft_w25_" + (d + "_" + fp).replaceAll("[^A-Za-z0-9._]", "_"))
+      val base = JPaths.get(StoreGate.root("w25", d + "_" + fp))
       def rmrf(p: java.nio.file.Path): Unit = if (JFiles.exists(p)) {
         val walk = JFiles.walk(p)
         try walk.sorted(java.util.Comparator.reverseOrder())
@@ -3402,9 +3125,7 @@ object SparkEntry {
       // cell rule, allocation + take ≡ d95's integer contract.
       val emb = t(s, d, "embeddings")
       val cents = graft.operators.Similarity.collectCentroids(
-        emb.filter(col("vec_id") < 8)
-          .select(col("vec_id").cast("int").as("centroid_id"),
-            col("embedding").as("centroid_vec")))
+        StoreGate.centroids(emb))
       val assigned = emb.select(col("vec_id"),
         element_at(
           graft.plans.VectorExpressions.nearestCells(col("embedding"), cents, 1), 1)
@@ -4108,8 +3829,7 @@ object SparkEntry {
       // whole probe — cell assignment, nProbe cell selection, in-cell cosine
       // top-k — is exactly reproducible by the DuckDB oracle's window form
       val emb = t(s, d, "embeddings")
-      val cents = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("int").as("centroid_id"), col("embedding").as("centroid_vec"))
+      val cents = StoreGate.centroids(emb)
       Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 3), cents, k = 5, nProbe = 2)
         .select(col("query_id"), col("corpus_id"), round(col("cosine"), 6).as("cosine"),
           col("rank"))
@@ -4121,8 +3841,7 @@ object SparkEntry {
       // user runs before freezing nProbe/nCells at scale. Set-membership
       // recall: engine rank tie-breaks cannot move it.
       val emb = t(s, d, "embeddings")
-      val cents = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("int").as("centroid_id"), col("embedding").as("centroid_vec"))
+      val cents = StoreGate.centroids(emb)
       Similarity.ivfRecallAtK(emb, emb.filter(col("vec_id") < 5), cents, k = 10, nProbe = 2)
         .orderBy("query_id")
     }),
@@ -4132,9 +3851,7 @@ object SparkEntry {
       // recall target. Set-membership recall per budget — rank tie-breaks
       // cannot move it.
       val emb = t(s, d, "embeddings")
-      val cents = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("int").as("centroid_id"),
-          col("embedding").as("centroid_vec"))
+      val cents = StoreGate.centroids(emb)
       Similarity.ivfRecallSweep(emb, emb.filter(col("vec_id") < 5), cents,
           k = 10, probes = Seq(1, 2, 4))
         .orderBy("n_probe", "query_id")
@@ -4192,9 +3909,7 @@ object SparkEntry {
       // only. The standard trade vs post-filtering: probe more cells when
       // selectivity is low (e28's sweep is the tuning table for that).
       val emb = t(s, d, "embeddings")
-      val cents = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("int").as("centroid_id"),
-          col("embedding").as("centroid_vec"))
+      val cents = StoreGate.centroids(emb)
       Similarity.ivfTopK(emb.filter(col("label").isin(1, 3, 5, 7, 9)),
           emb.filter(col("vec_id") < 3), cents, k = 10, nProbe = 2)
         .select(col("query_id"), col("corpus_id"),
@@ -4232,8 +3947,7 @@ object SparkEntry {
       // native expression compares squared L2, the oracle compares L2 —
       // monotonic, so the flags agree).
       val emb = t(s, d, "embeddings")
-      val cents = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("int").as("centroid_id"), col("embedding").as("centroid_vec"))
+      val cents = StoreGate.centroids(emb)
       val r = 1.36
       graft.operators.KMeans.assignDistances(emb, cents, "embedding", "vec_id")
         .groupBy(col("cell"))
@@ -4265,8 +3979,7 @@ object SparkEntry {
       // billion-vector layout: probe cost = (nProbe/nCells) of the corpus
       // × (m bytes / dim×4) of the vector payload.
       val emb = t(s, d, "embeddings")
-      val coarse = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("int").as("centroid_id"), col("embedding").as("centroid_vec"))
+      val coarse = StoreGate.centroids(emb)
       val cbs = Similarity.pqCodebooks(
         emb.filter(col("vec_id") < 16)
           .select(col("vec_id").cast("int").as("centroid_id"), col("embedding").as("centroid_vec")),
@@ -4329,9 +4042,7 @@ object SparkEntry {
       // partials. Fixed first-8 centroids keep the whole construction
       // SQL-reproducible (e6's stance).
       val emb = t(s, d, "embeddings")
-      val cents = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("int").as("centroid_id"),
-          col("embedding").as("centroid_vec"))
+      val cents = StoreGate.centroids(emb)
       Similarity.knnGraph(emb, cents, k = 3)
         .select(col("id"), col("nbr_id"), round(col("cosine"), 6).as("cosine"),
           col("rank"))
@@ -4376,9 +4087,7 @@ object SparkEntry {
         perm.map(model.eigenvalues(_)), perm.map(model.components(_)))
       val proj = graft.operators.Pca.project(emb, rot)
         .select(col("vec_id"), col("proj").as("embedding"))
-      val coarse = proj.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("int").as("centroid_id"),
-          col("embedding").as("centroid_vec"))
+      val coarse = StoreGate.centroids(proj)
       val cbs = Similarity.residualCodebooks(proj.filter(col("vec_id") < 16), coarse, m = 8)
       Similarity.ivfPqResidualTopK(proj, proj.filter(col("vec_id") < 3), coarse, cbs,
           k = 5, nProbe = 2)
@@ -4477,9 +4186,7 @@ object SparkEntry {
       // cells-cardinality aggregate.
       graft.operators.KMeans.assignDistances(
           t(s, d, "embeddings"),
-          t(s, d, "embeddings").filter(col("vec_id") < 8)
-            .select(col("vec_id").cast("int").as("centroid_id"),
-              col("embedding").as("centroid_vec")),
+          StoreGate.centroids(t(s, d, "embeddings")),
           vecCol = "embedding", idCol = "vec_id")
         .groupBy("cell")
         .agg(count(lit(1)).as("n_vectors"), round(sum("dist_sq"), 4).as("sse"))
@@ -4498,9 +4205,7 @@ object SparkEntry {
         perm.map(model.eigenvalues(_)), perm.map(model.components(_)))
       val proj = graft.operators.Pca.project(emb, rot)
         .select(col("vec_id"), col("proj").as("embedding"))
-      val coarse = proj.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("int").as("centroid_id"),
-          col("embedding").as("centroid_vec"))
+      val coarse = StoreGate.centroids(proj)
       val cbs = Similarity.residualCodebooks(proj.filter(col("vec_id") < 16), coarse, m = 8)
       Similarity.ivfPqRefineTopK(proj, proj.filter(col("vec_id") < 3), coarse, cbs,
           kFinal = 5, kCoarse = 20, nProbe = 2)
@@ -4514,8 +4219,7 @@ object SparkEntry {
       // reproducible training inputs (e6/e9's stance): coarse = first-8
       // vectors, residual codebooks = residuals of the first-16 vectors.
       val emb = t(s, d, "embeddings")
-      val coarse = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("int").as("centroid_id"), col("embedding").as("centroid_vec"))
+      val coarse = StoreGate.centroids(emb)
       val cbs = Similarity.residualCodebooks(emb.filter(col("vec_id") < 16), coarse, m = 8)
       Similarity.ivfPqResidualTopK(emb, emb.filter(col("vec_id") < 3), coarse, cbs,
           k = 5, nProbe = 2)
@@ -4530,8 +4234,7 @@ object SparkEntry {
       // candidates only (queries × kCoarse id-keyed rows). Oracle: e13's
       // pure-SQL chain extended with the exact-L2 refine step.
       val emb = t(s, d, "embeddings")
-      val coarse = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("int").as("centroid_id"), col("embedding").as("centroid_vec"))
+      val coarse = StoreGate.centroids(emb)
       val cbs = Similarity.residualCodebooks(emb.filter(col("vec_id") < 16), coarse, m = 8)
       Similarity.ivfPqRefineTopK(emb, emb.filter(col("vec_id") < 3), coarse, cbs,
           kFinal = 5, kCoarse = 20)
@@ -4548,8 +4251,7 @@ object SparkEntry {
       val emb = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
       val planted = emb.filter(col("vec_id") < 15)
         .select((col("vec_id") + 20000).as("vec_id"), col("embedding"))
-      val cents = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("int").as("centroid_id"), col("embedding").as("centroid_vec"))
+      val cents = StoreGate.centroids(emb)
       Similarity.semanticDedup(emb.unionByName(planted), cents, threshold = 0.95)
         .select(col("vec_id"), col("cell").cast("long").as("cell"), col("dup_of"), col("kept"))
         .orderBy("vec_id")
@@ -4559,8 +4261,7 @@ object SparkEntry {
       // narrow corpus pass, centroids ride the expression tree (no join, no
       // window shuffle)
       val emb = t(s, d, "embeddings")
-      val cents = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("int").as("centroid_id"), col("embedding").as("centroid_vec"))
+      val cents = StoreGate.centroids(emb)
       graft.operators.KMeans.assignCells(emb, cents, "embedding", "vec_id")
         .groupBy(col("cell"))
         .agg(count(lit(1)).as("n_vectors"))
@@ -4763,8 +4464,7 @@ object SparkEntry {
       // oracle predicts them by arithmetic (the m7 stance) and rebuilds
       // the assembled sequence byte-exactly. Binary side joins the text
       // side by id — a 200-row broadcast against a narrow projection.
-      val dir = new java.io.File(
-        s"${System.getProperty("java.io.tmpdir")}/graft_m15_media_${d.replaceAll("[^A-Za-z0-9.]", "_")}")
+      val dir = new java.io.File(StoreGate.root("m15_media", d))
       dir.mkdirs()
       import s.implicits._
       val ids = t(s, d, "documents").select(col("doc_id"))
@@ -4809,8 +4509,7 @@ object SparkEntry {
       // the binaryFile source (path/length/content rows, pathGlobFilter
       // prunes at listing), then the same real ImageIO decode. At 100 TB
       // this is the layout media arrives in — object-store files, not rows.
-      val dir = new java.io.File(
-        s"${System.getProperty("java.io.tmpdir")}/graft_m7_media_${d.replaceAll("[^A-Za-z0-9.]", "_")}")
+      val dir = new java.io.File(StoreGate.root("m7_media", d))
       dir.mkdirs()
       // files are the INPUT contract here: materialize once, idempotently
       import s.implicits._
@@ -4939,8 +4638,7 @@ object SparkEntry {
       // d87's one-shot SQL verbatim, so a green row proves the at-rest
       // index path (write -> read -> join) AND batch invariance.
       val docs = t(s, d, "documents")
-      val dir = s"${System.getProperty("java.io.tmpdir")}/graft_w24_" +
-        d.replaceAll("[^A-Za-z0-9.]", "_")
+      val dir = StoreGate.fresh(s, "w24", d)
       graft.streaming.StreamingSpanDecontam.init(
         docs.filter(pmod(col("doc_id"), lit(31)) === 0), dir)
       graft.streaming.StreamingSpanDecontam.judgeFold(
@@ -4956,21 +4654,8 @@ object SparkEntry {
       // from the probed cells only (the standard IVF recall trade; the
       // spec pins full-probe ≡ the brute-force miner).
       val emb = t(s, d, "embeddings")
-      val cents = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("int").as("centroid_id"),
-          col("embedding").as("centroid_vec"))
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_w30_ivfneg_" +
-        d.replaceAll("[^A-Za-z0-9.]", "_")
-      graft.streaming.StreamingIvf.init(cents, path)
-      // one quantizer handle for the whole gate (round 17)
-      val ch = Some(graft.operators.Similarity.collectCentroids(cents))
-      val n = emb.agg(max("vec_id")).head.getLong(0) + 1
-      val span = n / 3 + 1
-      // overlapped — see the ivf-epoch note above (guide §2.6, round 17)
-      graft.operators.Overlap.chains((0L until 3L).map(e => () =>
-        graft.streaming.StreamingIvf.appendEpoch(
-          emb.filter(col("vec_id") >= e * span && col("vec_id") < (e + 1) * span),
-          path, e, payloadCols = Seq("label"), centsOpt = ch)): _*)
+      val path = StoreGate.fresh(s, "w30_ivfneg", d)
+      val ch = StoreGate.ivfBuild(emb, path, 3, payloadCols = Seq("label"))
       graft.streaming.StreamingIvf.hardNegativeSearch(
           s, path, emb.filter(col("vec_id") < 5), k = 5, nProbe = 2,
           centsOpt = ch)
@@ -4989,23 +4674,8 @@ object SparkEntry {
       // greedy argmax — with margin asserts so float noise cannot flip
       // a pick.
       val emb = t(s, d, "embeddings")
-      val cents = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("int").as("centroid_id"),
-          col("embedding").as("centroid_vec"))
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_e38_mmr_" +
-        d.replaceAll("[^A-Za-z0-9.]", "_")
-      graft.streaming.StreamingIvf.init(cents, path)
-      // one quantizer handle for the whole gate (round 17)
-      val ch = Some(graft.operators.Similarity.collectCentroids(cents))
-      val n = emb.agg(max("vec_id")).head.getLong(0) + 1
-      val span = n / 3 + 1
-      // the quantizer is already frozen (init) and epochs write disjoint
-      // dirs under their own write-intent markers — overlapped (guide
-      // §2.6, round 17)
-      graft.operators.Overlap.chains((0L until 3L).map(e => () =>
-        graft.streaming.StreamingIvf.appendEpoch(
-          emb.filter(col("vec_id") >= e * span && col("vec_id") < (e + 1) * span),
-          path, e, centsOpt = ch)): _*)
+      val path = StoreGate.fresh(s, "e38_mmr", d)
+      StoreGate.ivfBuild(emb, path, 3)
       graft.streaming.StreamingIvf.mmrSearch(
           s, path, emb.filter(col("vec_id") < 5),
           candidates = 20, k = 8, lambda = 0.7, nProbe = 2)
@@ -5070,21 +4740,8 @@ object SparkEntry {
       // the source table. Anchors whose probed cells hold no same-label
       // partner emit no triplets.
       val emb = t(s, d, "embeddings")
-      val cents = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("int").as("centroid_id"),
-          col("embedding").as("centroid_vec"))
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_e37_trip_" +
-        d.replaceAll("[^A-Za-z0-9.]", "_")
-      graft.streaming.StreamingIvf.init(cents, path)
-      // one quantizer handle for the whole gate (round 17)
-      val ch = Some(graft.operators.Similarity.collectCentroids(cents))
-      val n = emb.agg(max("vec_id")).head.getLong(0) + 1
-      val span = n / 3 + 1
-      // overlapped — see the ivf-epoch note above (guide §2.6, round 17)
-      graft.operators.Overlap.chains((0L until 3L).map(e => () =>
-        graft.streaming.StreamingIvf.appendEpoch(
-          emb.filter(col("vec_id") >= e * span && col("vec_id") < (e + 1) * span),
-          path, e, payloadCols = Seq("label"), centsOpt = ch)): _*)
+      val path = StoreGate.fresh(s, "e37_trip", d)
+      StoreGate.ivfBuild(emb, path, 3, payloadCols = Seq("label"))
       graft.streaming.StreamingIvf.tripletSearch(
           s, path, emb.filter(col("vec_id") < 5), k = 3, nProbe = 2)
         .select(col("anchor_id"), col("pos_id"),
@@ -5101,21 +4758,8 @@ object SparkEntry {
       // strict cos < pc margin applies POST-SCORE before the top-k so
       // over-threshold candidates never occupy result slots.
       val emb = t(s, d, "embeddings")
-      val cents = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("int").as("centroid_id"),
-          col("embedding").as("centroid_vec"))
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_w36_semih_" +
-        d.replaceAll("[^A-Za-z0-9.]", "_")
-      graft.streaming.StreamingIvf.init(cents, path)
-      // one quantizer handle for the whole gate (round 17)
-      val ch = Some(graft.operators.Similarity.collectCentroids(cents))
-      val n = emb.agg(max("vec_id")).head.getLong(0) + 1
-      val span = n / 3 + 1
-      // overlapped — see the ivf-epoch note above (guide §2.6, round 17)
-      graft.operators.Overlap.chains((0L until 3L).map(e => () =>
-        graft.streaming.StreamingIvf.appendEpoch(
-          emb.filter(col("vec_id") >= e * span && col("vec_id") < (e + 1) * span),
-          path, e, payloadCols = Seq("label"), centsOpt = ch)): _*)
+      val path = StoreGate.fresh(s, "w36_semih", d)
+      val ch = StoreGate.ivfBuild(emb, path, 3, payloadCols = Seq("label"))
       graft.streaming.StreamingIvf.semiHardNegativeSearch(
           s, path, emb.filter(col("vec_id") < 5), k = 5, nProbe = 2,
           centsOpt = ch)
@@ -5133,21 +4777,8 @@ object SparkEntry {
       // every IVF probe.
       val emb = t(s, d, "embeddings")
         .withColumn("quality", pmod(col("vec_id"), lit(7)).cast("int"))
-      val cents = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("int").as("centroid_id"),
-          col("embedding").as("centroid_vec"))
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_w31_ivfq_" +
-        d.replaceAll("[^A-Za-z0-9.]", "_")
-      graft.streaming.StreamingIvf.init(cents, path)
-      // one quantizer handle for the whole gate (round 17)
-      val ch = Some(graft.operators.Similarity.collectCentroids(cents))
-      val n = emb.agg(max("vec_id")).head.getLong(0) + 1
-      val span = n / 3 + 1
-      // overlapped — see the ivf-epoch note above (guide §2.6, round 17)
-      graft.operators.Overlap.chains((0L until 3L).map(e => () =>
-        graft.streaming.StreamingIvf.appendEpoch(
-          emb.filter(col("vec_id") >= e * span && col("vec_id") < (e + 1) * span),
-          path, e, payloadCols = Seq("quality"), centsOpt = ch)): _*)
+      val path = StoreGate.fresh(s, "w31_ivfq", d)
+      val ch = StoreGate.ivfBuild(emb, path, 3, payloadCols = Seq("quality"))
       graft.streaming.StreamingIvf.filteredSearch(
           s, path, emb.filter(col("vec_id") < 5), k = 5, nProbe = 2,
           corpusPayloadCols = Seq("quality"),
@@ -5167,23 +4798,15 @@ object SparkEntry {
       // at-rest side, ever. Threshold compares ROUNDED cosine so the
       // boundary is engine-stable.
       val emb = t(s, d, "embeddings")
-      val cents = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("int").as("centroid_id"),
-          col("embedding").as("centroid_vec"))
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_w32_semdd_" +
-        d.replaceAll("[^A-Za-z0-9.]", "_")
-      graft.streaming.StreamingIvf.init(cents, path)
-      // one quantizer handle for the whole gate (round 17)
-      val ch = Some(graft.operators.Similarity.collectCentroids(cents))
+      val path = StoreGate.fresh(s, "w32_semdd", d)
+      val ch = StoreGate.ivfInit(emb, path)
       val n = emb.agg(max("vec_id")).head.getLong(0) + 1
       val mid = (n + 10) / 2
-      // the two epochs write disjoint dirs — overlapped (guide §2.6)
-      graft.operators.Overlap.chains(
-        () => graft.streaming.StreamingIvf.appendEpoch(
-          emb.filter(col("vec_id") >= 10 && col("vec_id") < mid), path, 0,
-          centsOpt = ch),
-        () => graft.streaming.StreamingIvf.appendEpoch(
-          emb.filter(col("vec_id") >= mid), path, 1, centsOpt = ch))
+      // the corpus is every vector but the first 10 (the arrivals)
+      StoreGate.build(Seq(col("vec_id") >= 10 && col("vec_id") < mid,
+          col("vec_id") >= mid), seeded = true) { (e, in) =>
+        graft.streaming.StreamingIvf.appendEpoch(emb.filter(in), path, e, centsOpt = ch)
+      }
       graft.streaming.StreamingIvf.search(
           s, path, emb.filter(col("vec_id") < 10), k = 1, nProbe = 2,
           centsOpt = ch)
@@ -5201,28 +4824,11 @@ object SparkEntry {
       // old centroids. The post-refit search must equal the in-memory
       // probe with the new centroids — e6's oracle shape at 12 cells.
       val emb = t(s, d, "embeddings")
-      def cents(n: Int) = emb.filter(col("vec_id") < n)
-        .select(col("vec_id").cast("int").as("centroid_id"),
-          col("embedding").as("centroid_vec"))
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_w38_refit_" +
-        d.replaceAll("[^A-Za-z0-9.]", "_")
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI("file:///"), s.sessionState.newHadoopConf())
-      // the swap renames the index root: a re-run starts from a clean tree
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
-      fs.delete(new org.apache.hadoop.fs.Path(path + ".compacting"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(path + ".compacting.COMMITTED"), false)
-      graft.streaming.StreamingIvf.init(cents(8), path)
-      val n = emb.agg(max("vec_id")).head.getLong(0) + 1
-      val span = n / 2 + 1
-      (0L until 2L).foreach { e =>
-        graft.streaming.StreamingIvf.appendEpoch(
-          emb.filter(col("vec_id") >= e * span && col("vec_id") < (e + 1) * span),
-          path, e)
-      }
-      graft.streaming.StreamingIvf.refit(s, path, cents(12))
-      require(fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/corpus"))
-        .filter(_.isDirectory).map(_.getPath.getName).toSet == Set("epoch=-1"),
+      // the swap renames the index root: every run starts clean
+      val path = StoreGate.fresh(s, "w38_refit", d)
+      StoreGate.ivfBuild(emb, path, 2)
+      graft.streaming.StreamingIvf.refit(s, path, StoreGate.centroids(emb, 12))
+      require(StoreGate.subdirs(s, s"$path/corpus") == Set("epoch=-1"),
         "refit must leave only the re-routed epoch")
       require(s.read.parquet(s"$path/centroids").count() == 12,
         "refit must install the new quantizer")
@@ -5242,34 +4848,15 @@ object SparkEntry {
       // with structural requires that the tombstone store is gone and
       // only epoch=-1 remains; the spec pins pre-compact ≡ post-compact.
       val emb = t(s, d, "embeddings")
-      val cents = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("int").as("centroid_id"),
-          col("embedding").as("centroid_vec"))
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_w33_tomb_" +
-        d.replaceAll("[^A-Za-z0-9.]", "_")
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI("file:///"), s.sessionState.newHadoopConf())
-      // compaction renames directories: a re-run must start from a clean
-      // tree (the swap's staging/marker siblings live under path too)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
-      graft.streaming.StreamingIvf.init(cents, path)
-      // one quantizer handle for the whole gate (round 17)
-      val ch = Some(graft.operators.Similarity.collectCentroids(cents))
-      val n = emb.agg(max("vec_id")).head.getLong(0) + 1
-      val span = n / 2 + 1
-      // the two epochs write disjoint dirs — overlapped (guide §2.6)
-      graft.operators.Overlap.chains(
-        () => graft.streaming.StreamingIvf.appendEpoch(
-          emb.filter(col("vec_id") < span), path, 0, centsOpt = ch),
-        () => graft.streaming.StreamingIvf.appendEpoch(
-          emb.filter(col("vec_id") >= span), path, 1, centsOpt = ch))
+      // compaction renames directories: every run starts clean
+      val path = StoreGate.fresh(s, "w33_tomb", d)
+      StoreGate.ivfBuild(emb, path, 2)
       graft.streaming.StreamingIvf.deleteEpoch(
         emb.filter(pmod(col("vec_id"), lit(13)) === 0).select("vec_id"), path, 0)
       graft.streaming.StreamingIvf.compact(s, path)
-      require(fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/corpus"))
-        .filter(_.isDirectory).map(_.getPath.getName).toSet == Set("epoch=-1"),
+      require(StoreGate.subdirs(s, s"$path/corpus") == Set("epoch=-1"),
         "corpus must hold only the compacted epoch")
-      require(!fs.exists(new org.apache.hadoop.fs.Path(s"$path/tombstones")),
+      require(!StoreGate.exists(s, s"$path/tombstones"),
         "compaction must clear the applied tombstone store")
       graft.streaming.StreamingIvf.search(
           s, path, emb.filter(col("vec_id") < 5), k = 5, nProbe = 2)
@@ -5284,23 +4871,8 @@ object SparkEntry {
       // (replay-idempotent). The search over the at-rest epoch union must
       // equal the in-memory ivfTopK probe exactly — e6's oracle, verbatim.
       val emb = t(s, d, "embeddings")
-      val cents = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("int").as("centroid_id"),
-          col("embedding").as("centroid_vec"))
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_w8_ivf_" +
-        d.replaceAll("[^A-Za-z0-9.]", "_")
-      graft.streaming.StreamingIvf.init(cents, path)
-      // one quantizer handle for the whole gate (round 17)
-      val ch = Some(graft.operators.Similarity.collectCentroids(cents))
-      val n = emb.agg(max("vec_id")).head.getLong(0) + 1
-      val span = n / 3 + 1
-      // the quantizer is already frozen (init) and epochs write disjoint
-      // dirs under their own write-intent markers — overlapped (guide
-      // §2.6, round 17)
-      graft.operators.Overlap.chains((0L until 3L).map(e => () =>
-        graft.streaming.StreamingIvf.appendEpoch(
-          emb.filter(col("vec_id") >= e * span && col("vec_id") < (e + 1) * span),
-          path, e, centsOpt = ch)): _*)
+      val path = StoreGate.fresh(s, "w8_ivf", d)
+      val ch = StoreGate.ivfBuild(emb, path, 3)
       graft.streaming.StreamingIvf.search(s, path, emb.filter(col("vec_id") < 3),
           k = 5, nProbe = 2, centsOpt = ch)
         .select(col("query_id"), col("corpus_id"),
@@ -5563,6 +5135,117 @@ object SparkEntry {
          WHERE d.doc_id % 31 <> 0
          ORDER BY d.doc_id"""
 
+  /** Full-corpus BM25 top-10 replay: e30's batch answer, and every standing
+    * BM25 store gate whose protocol must leave that answer unchanged
+    * (w27 append, w39 rebucket, w40 lease guard, w42/w44/w45 snapshot
+    * restores). */
+  private val bm25CorpusOracleSql: String =
+    """WITH dt AS (SELECT doc_id,
+             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
+               x -> length(x) > 0) AS tk
+           FROM documents),
+         st AS (SELECT count(*)::DOUBLE AS n, avg(len(tk)::DOUBLE) AS avgdl
+           FROM dt),
+         qt AS (SELECT DISTINCT doc_id AS query_id, unnest(tk[1:6]) AS term
+           FROM dt WHERE doc_id % 97 = 0),
+         tok AS (SELECT doc_id, len(tk)::DOUBLE AS dl, unnest(tk) AS term
+           FROM dt),
+         tfr AS (SELECT doc_id, dl, term, count(*)::DOUBLE AS tf FROM tok
+           WHERE term IN (SELECT term FROM qt) GROUP BY 1, 2, 3),
+         dfr AS (SELECT term, count(*)::DOUBLE AS df FROM tfr GROUP BY 1),
+         sc AS (SELECT q.query_id, t.doc_id,
+             round(sum(ln(1 + (st.n - f.df + 0.5) / (f.df + 0.5)) * t.tf
+               * (1.2 + 1) / (t.tf + 1.2 * (1 - 0.75 + 0.75 * t.dl / st.avgdl))),
+               4) AS score
+           FROM qt q JOIN tfr t USING (term) JOIN dfr f USING (term)
+           CROSS JOIN st GROUP BY 1, 2),
+         r AS (SELECT query_id, doc_id, score, row_number() OVER (
+             PARTITION BY query_id ORDER BY score DESC, doc_id) AS rank
+           FROM sc)
+         SELECT query_id, rank::BIGINT AS rank, doc_id, score FROM r
+         WHERE rank <= 10 ORDER BY query_id, rank"""
+
+  /** Per-doc (n_tokens, sum_ids) of the vocab-encoded corpus: s22's batch
+    * packed round trip and w28's standing epoch export. */
+  private val packedRoundtripOracleSql: String =
+    """WITH t AS (SELECT doc_id,
+             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
+               x -> length(x) > 0) AS toks FROM documents),
+         exp AS (SELECT doc_id, unnest(toks) AS token,
+             unnest(range(1, len(toks)+1)) AS pos FROM t WHERE len(toks) > 0),
+         cnts AS (SELECT token, count(*) AS cnt FROM exp GROUP BY 1),
+         vocab AS (SELECT token, vid FROM (
+             SELECT token, (row_number() OVER (ORDER BY cnt DESC, token) - 1)::BIGINT AS vid
+             FROM cnts) WHERE vid < 256),
+         enc AS (SELECT e.doc_id, COALESCE(v.vid, -1)::BIGINT AS vid
+             FROM exp e LEFT JOIN vocab v USING (token))
+         SELECT doc_id, count(*)::BIGINT AS n_tokens,
+           sum(vid)::BIGINT AS sum_ids
+         FROM enc GROUP BY doc_id ORDER BY doc_id"""
+
+  /** Shared by d14 (exact) and d21 (Bloom-filtered) decontamination. */
+  private val decontamOracleSql: String =
+    """WITH t AS (SELECT doc_id,
+             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
+               x -> length(x) > 0) AS toks FROM documents),
+           sh AS (SELECT doc_id, unnest(list_distinct(
+             CASE WHEN len(toks) - 3 <= 0 THEN [array_to_string(toks, ' ')]
+               ELSE list_transform(generate_series(1, len(toks) - 3),
+                 i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' '
+                   || toks[i+3]) END)) AS sh
+             FROM t),
+           probe AS (SELECT DISTINCT sh FROM sh WHERE doc_id % 31 = 0),
+           corpus AS (SELECT doc_id, sh FROM sh WHERE doc_id % 31 <> 0)
+         SELECT c.doc_id, count(*) AS n_shared
+         FROM corpus c JOIN probe p USING (sh)
+         GROUP BY 1 ORDER BY doc_id"""
+
+  /** The first-8-centroid IVF probe: e6 in memory, w8 over the standing
+    * epoch store. */
+  private val ivfProbeOracleSql: String =
+    """WITH c AS (SELECT vec_id::INT AS centroid_id, embedding::DOUBLE[] AS cv
+             FROM embeddings WHERE vec_id < 8),
+           corpus_cell AS (
+             SELECT vec_id, centroid_id AS cell FROM (
+               SELECT e.vec_id, c.centroid_id,
+                 row_number() OVER (PARTITION BY e.vec_id
+                   ORDER BY list_distance(e.embedding::DOUBLE[], c.cv), c.centroid_id) AS r
+               FROM embeddings e, c) WHERE r = 1),
+           query_cells AS (
+             SELECT query_id, centroid_id AS cell FROM (
+               SELECT q.vec_id AS query_id, c.centroid_id,
+                 row_number() OVER (PARTITION BY q.vec_id
+                   ORDER BY list_distance(q.embedding::DOUBLE[], c.cv), c.centroid_id) AS r
+               FROM embeddings q, c WHERE q.vec_id < 3) WHERE r <= 2),
+           scored AS (
+             SELECT qc.query_id, cc.vec_id AS corpus_id,
+               list_cosine_similarity(e.embedding::DOUBLE[], q.embedding::DOUBLE[]) AS cos
+             FROM query_cells qc JOIN corpus_cell cc ON cc.cell = qc.cell
+             JOIN embeddings e ON e.vec_id = cc.vec_id
+             JOIN embeddings q ON q.vec_id = qc.query_id
+             WHERE cc.vec_id <> qc.query_id),
+           ranked AS (SELECT query_id, corpus_id, cos,
+             row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, corpus_id) AS rank
+             FROM scored)
+         SELECT query_id, corpus_id, round(cos, 6) AS cosine, rank::INT AS rank
+         FROM ranked WHERE rank <= 5 ORDER BY query_id, rank"""
+
+  /** Backward as-of join: a1 in batch, a5 as the streaming fold. */
+  private val asofBackwardOracleSql: String =
+    """SELECT e.event_id, ord.o_orderkey, ord.o_totalprice
+         FROM (SELECT event_id, user_id,
+             (DATE '1995-01-01' + (event_id % 2400)::INT)::TIMESTAMP AS edate
+           FROM events) e
+         LEFT JOIN LATERAL (
+           SELECT o_orderkey, o_totalprice FROM orders o
+           WHERE o.o_custkey = e.user_id AND o.o_orderdate <= e.edate
+           ORDER BY o.o_orderdate DESC, o.o_orderkey DESC LIMIT 1) ord ON true
+         ORDER BY event_id"""
+
+  /** Encode→decode round trips: the oracle is the source table. */
+  private val eventsRoundtripOracleSql: String =
+    "SELECT event_id, event_type, value FROM events ORDER BY event_id"
+
   def oracleSql: Map[String, String] = Map(
     "q1_pricing_summary" ->
       """SELECT l_returnflag, l_linestatus,
@@ -5786,10 +5469,8 @@ object SparkEntry {
          lpad(hex(epoch_ms(ts)), 16, '0') AS ots
          FROM events ORDER BY event_id""",
     // s12/s13: encode→decode round-trips — the oracle is the source table
-    "s12_avro_roundtrip" ->
-      "SELECT event_id, event_type, value FROM events ORDER BY event_id",
-    "s13_proto_roundtrip" ->
-      "SELECT event_id, event_type, value FROM events ORDER BY event_id",
+    "s12_avro_roundtrip" -> eventsRoundtripOracleSql,
+    "s13_proto_roundtrip" -> eventsRoundtripOracleSql,
     "s11_pack_messages" ->
       """WITH l AS (SELECT doc_id % 10 AS file_id, doc_id, text,
            row_number() OVER (PARTITION BY doc_id % 10 ORDER BY doc_id) - 1 AS pos
@@ -5899,21 +5580,7 @@ object SparkEntry {
          FROM enc GROUP BY doc_id ORDER BY doc_id""",
     // d21 is d14's scale-path twin: SAME oracle semantics (bloom prune is
     // invisible in the result — no false negatives, FPs removed exactly)
-    "d21_decontaminate_bloom" ->
-      """WITH t AS (SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-               x -> length(x) > 0) AS toks FROM documents),
-           sh AS (SELECT doc_id, unnest(list_distinct(
-             CASE WHEN len(toks) - 3 <= 0 THEN [array_to_string(toks, ' ')]
-               ELSE list_transform(generate_series(1, len(toks) - 3),
-                 i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' '
-                   || toks[i+3]) END)) AS sh
-             FROM t),
-           probe AS (SELECT DISTINCT sh FROM sh WHERE doc_id % 31 = 0),
-           corpus AS (SELECT doc_id, sh FROM sh WHERE doc_id % 31 <> 0)
-         SELECT c.doc_id, count(*) AS n_shared
-         FROM corpus c JOIN probe p USING (sh)
-         GROUP BY 1 ORDER BY doc_id""",
+    "d21_decontaminate_bloom" -> decontamOracleSql,
     "d28_dup_spans" ->
       """WITH t AS (SELECT doc_id,
              list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
@@ -6873,21 +6540,7 @@ object SparkEntry {
            len(t.toks)::BIGINT AS n_tokens,
            (len(t.toks) - COALESCE(reb.n_kept, 0))::BIGINT AS n_removed
          FROM t LEFT JOIN reb USING (doc_id) ORDER BY doc_id""",
-    "d14_decontaminate" ->
-      """WITH t AS (SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-               x -> length(x) > 0) AS toks FROM documents),
-           sh AS (SELECT doc_id, unnest(list_distinct(
-             CASE WHEN len(toks) - 3 <= 0 THEN [array_to_string(toks, ' ')]
-               ELSE list_transform(generate_series(1, len(toks) - 3),
-                 i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' '
-                   || toks[i+3]) END)) AS sh
-             FROM t),
-           probe AS (SELECT DISTINCT sh FROM sh WHERE doc_id % 31 = 0),
-           corpus AS (SELECT doc_id, sh FROM sh WHERE doc_id % 31 <> 0)
-         SELECT c.doc_id, count(*) AS n_shared
-         FROM corpus c JOIN probe p USING (sh)
-         GROUP BY 1 ORDER BY doc_id""",
+    "d14_decontaminate" -> decontamOracleSql,
     "d20_chunk_tokens" ->
       """WITH t AS (SELECT doc_id,
              list_filter(regexp_split_to_array(trim(text), '\s+'),
@@ -7474,33 +7127,7 @@ object SparkEntry {
     // e4: fixture oracle from an independent Python Lloyd's — see
     // FixtureOracles (merged below). e6: the probe with fixed centroids is
     // fully SQL-reproducible.
-    "e6_ivf_probe" ->
-      """WITH c AS (SELECT vec_id::INT AS centroid_id, embedding::DOUBLE[] AS cv
-             FROM embeddings WHERE vec_id < 8),
-           corpus_cell AS (
-             SELECT vec_id, centroid_id AS cell FROM (
-               SELECT e.vec_id, c.centroid_id,
-                 row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY list_distance(e.embedding::DOUBLE[], c.cv), c.centroid_id) AS r
-               FROM embeddings e, c) WHERE r = 1),
-           query_cells AS (
-             SELECT query_id, centroid_id AS cell FROM (
-               SELECT q.vec_id AS query_id, c.centroid_id,
-                 row_number() OVER (PARTITION BY q.vec_id
-                   ORDER BY list_distance(q.embedding::DOUBLE[], c.cv), c.centroid_id) AS r
-               FROM embeddings q, c WHERE q.vec_id < 3) WHERE r <= 2),
-           scored AS (
-             SELECT qc.query_id, cc.vec_id AS corpus_id,
-               list_cosine_similarity(e.embedding::DOUBLE[], q.embedding::DOUBLE[]) AS cos
-             FROM query_cells qc JOIN corpus_cell cc ON cc.cell = qc.cell
-             JOIN embeddings e ON e.vec_id = cc.vec_id
-             JOIN embeddings q ON q.vec_id = qc.query_id
-             WHERE cc.vec_id <> qc.query_id),
-           ranked AS (SELECT query_id, corpus_id, cos,
-             row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, corpus_id) AS rank
-             FROM scored)
-         SELECT query_id, corpus_id, round(cos, 6) AS cosine, rank::INT AS rank
-         FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""",
+    "e6_ivf_probe" -> ivfProbeOracleSql,
     // w8: the at-rest epoch-union search must equal the in-memory probe —
     // e6's oracle verbatim (same fixed centroids, same ranking contract)
     // w30: w8's probe chain with the anchor's label carried through the
@@ -7868,33 +7495,7 @@ object SparkEntry {
              FROM scored)
          SELECT query_id, corpus_id, round(cos, 6) AS cosine, rank
          FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""",
-    "w8_stream_ivf" ->
-      """WITH c AS (SELECT vec_id::INT AS centroid_id, embedding::DOUBLE[] AS cv
-             FROM embeddings WHERE vec_id < 8),
-           corpus_cell AS (
-             SELECT vec_id, centroid_id AS cell FROM (
-               SELECT e.vec_id, c.centroid_id,
-                 row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY list_distance(e.embedding::DOUBLE[], c.cv), c.centroid_id) AS r
-               FROM embeddings e, c) WHERE r = 1),
-           query_cells AS (
-             SELECT query_id, centroid_id AS cell FROM (
-               SELECT q.vec_id AS query_id, c.centroid_id,
-                 row_number() OVER (PARTITION BY q.vec_id
-                   ORDER BY list_distance(q.embedding::DOUBLE[], c.cv), c.centroid_id) AS r
-               FROM embeddings q, c WHERE q.vec_id < 3) WHERE r <= 2),
-           scored AS (
-             SELECT qc.query_id, cc.vec_id AS corpus_id,
-               list_cosine_similarity(e.embedding::DOUBLE[], q.embedding::DOUBLE[]) AS cos
-             FROM query_cells qc JOIN corpus_cell cc ON cc.cell = qc.cell
-             JOIN embeddings e ON e.vec_id = cc.vec_id
-             JOIN embeddings q ON q.vec_id = qc.query_id
-             WHERE cc.vec_id <> qc.query_id),
-           ranked AS (SELECT query_id, corpus_id, cos,
-             row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, corpus_id) AS rank
-             FROM scored)
-         SELECT query_id, corpus_id, round(cos, 6) AS cosine, rank::INT AS rank
-         FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""",
+    "w8_stream_ivf" -> ivfProbeOracleSql,
     "e12_ann_recall" ->
       """WITH c AS (SELECT vec_id::INT AS centroid_id, embedding::DOUBLE[] AS cv
              FROM embeddings WHERE vec_id < 8),
@@ -8087,28 +7688,11 @@ object SparkEntry {
            AND e.edate >= o.o_orderdate::DATE
            AND e.edate <= o.o_orderdate::DATE + 30
          GROUP BY 1 ORDER BY o_orderkey""",
-    "a1_asof_join" ->
-      """SELECT e.event_id, ord.o_orderkey, ord.o_totalprice
-         FROM (SELECT event_id, user_id,
-             (DATE '1995-01-01' + (event_id % 2400)::INT)::TIMESTAMP AS edate
-           FROM events) e
-         LEFT JOIN LATERAL (
-           SELECT o_orderkey, o_totalprice FROM orders o
-           WHERE o.o_custkey = e.user_id AND o.o_orderdate <= e.edate
-           ORDER BY o.o_orderdate DESC, o.o_orderkey DESC LIMIT 1) ord ON true
-         ORDER BY event_id""",
+    "a1_asof_join" -> asofBackwardOracleSql,
     "a5_asof_stream" ->
       // the streaming fold is exactly batch asofBackward under watermark-
       // respecting arrival order, so a1's LATERAL oracle applies verbatim
-      """SELECT e.event_id, ord.o_orderkey, ord.o_totalprice
-         FROM (SELECT event_id, user_id,
-             (DATE '1995-01-01' + (event_id % 2400)::INT)::TIMESTAMP AS edate
-           FROM events) e
-         LEFT JOIN LATERAL (
-           SELECT o_orderkey, o_totalprice FROM orders o
-           WHERE o.o_custkey = e.user_id AND o.o_orderdate <= e.edate
-           ORDER BY o.o_orderdate DESC, o.o_orderkey DESC LIMIT 1) ord ON true
-         ORDER BY event_id""",
+      asofBackwardOracleSql,
     "a2_asof_forward" ->
       """SELECT e.event_id, ord.o_orderkey, ord.o_totalprice
          FROM (SELECT event_id, user_id,
@@ -8332,31 +7916,7 @@ object SparkEntry {
          FROM documents a JOIN documents b
            ON substr(a.text, 1, 80) = substr(b.text, 1, 80) AND a.doc_id < b.doc_id
          GROUP BY 1, 2 ORDER BY 1, 2""",
-    "e30_bm25_topk" ->
-      """WITH dt AS (SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-               x -> length(x) > 0) AS tk
-           FROM documents),
-         st AS (SELECT count(*)::DOUBLE AS n, avg(len(tk)::DOUBLE) AS avgdl
-           FROM dt),
-         qt AS (SELECT DISTINCT doc_id AS query_id, unnest(tk[1:6]) AS term
-           FROM dt WHERE doc_id % 97 = 0),
-         tok AS (SELECT doc_id, len(tk)::DOUBLE AS dl, unnest(tk) AS term
-           FROM dt),
-         tfr AS (SELECT doc_id, dl, term, count(*)::DOUBLE AS tf FROM tok
-           WHERE term IN (SELECT term FROM qt) GROUP BY 1, 2, 3),
-         dfr AS (SELECT term, count(*)::DOUBLE AS df FROM tfr GROUP BY 1),
-         sc AS (SELECT q.query_id, t.doc_id,
-             round(sum(ln(1 + (st.n - f.df + 0.5) / (f.df + 0.5)) * t.tf
-               * (1.2 + 1) / (t.tf + 1.2 * (1 - 0.75 + 0.75 * t.dl / st.avgdl))),
-               4) AS score
-           FROM qt q JOIN tfr t USING (term) JOIN dfr f USING (term)
-           CROSS JOIN st GROUP BY 1, 2),
-         r AS (SELECT query_id, doc_id, score, row_number() OVER (
-             PARTITION BY query_id ORDER BY score DESC, doc_id) AS rank
-           FROM sc)
-         SELECT query_id, rank::BIGINT AS rank, doc_id, score FROM r
-         WHERE rank <= 10 ORDER BY query_id, rank""",
+    "e30_bm25_topk" -> bm25CorpusOracleSql,
     // d97: w8's assignment CTE + d95's integer allocation, tie order on
     // the cell as VARCHAR (matching largestRemainder's string-key ties)
     "d97_cluster_balance" ->
@@ -8666,59 +8226,12 @@ object SparkEntry {
          WHERE rank <= 10 ORDER BY query_id, rank""",
     // w39: w27's oracle VERBATIM — rebucketing is a pure layout change,
     // so the post-rebucket search must answer identically
-    "w39_bm25_rebucket" ->
-      """WITH dt AS (SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-               x -> length(x) > 0) AS tk
-           FROM documents),
-         st AS (SELECT count(*)::DOUBLE AS n, avg(len(tk)::DOUBLE) AS avgdl
-           FROM dt),
-         qt AS (SELECT DISTINCT doc_id AS query_id, unnest(tk[1:6]) AS term
-           FROM dt WHERE doc_id % 97 = 0),
-         tok AS (SELECT doc_id, len(tk)::DOUBLE AS dl, unnest(tk) AS term
-           FROM dt),
-         tfr AS (SELECT doc_id, dl, term, count(*)::DOUBLE AS tf FROM tok
-           WHERE term IN (SELECT term FROM qt) GROUP BY 1, 2, 3),
-         dfr AS (SELECT term, count(*)::DOUBLE AS df FROM tfr GROUP BY 1),
-         sc AS (SELECT q.query_id, t.doc_id,
-             round(sum(ln(1 + (st.n - f.df + 0.5) / (f.df + 0.5)) * t.tf
-               * (1.2 + 1) / (t.tf + 1.2 * (1 - 0.75 + 0.75 * t.dl / st.avgdl))),
-               4) AS score
-           FROM qt q JOIN tfr t USING (term) JOIN dfr f USING (term)
-           CROSS JOIN st GROUP BY 1, 2),
-         r AS (SELECT query_id, doc_id, score, row_number() OVER (
-             PARTITION BY query_id ORDER BY score DESC, doc_id) AS rank
-           FROM sc)
-         SELECT query_id, rank::BIGINT AS rank, doc_id, score FROM r
-         WHERE rank <= 10 ORDER BY query_id, rank""",
+    "w39_bm25_rebucket" -> bm25CorpusOracleSql,
     "w40_lease_guard" ->
       // the full-corpus BM25 replay (w27's oracle verbatim): the epoch
       // refused under the lease lands after release, so a silently lost
       // write OR a zombie promote of the empty staging breaks this hash
-      """WITH dt AS (SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-               x -> length(x) > 0) AS tk
-           FROM documents),
-         st AS (SELECT count(*)::DOUBLE AS n, avg(len(tk)::DOUBLE) AS avgdl
-           FROM dt),
-         qt AS (SELECT DISTINCT doc_id AS query_id, unnest(tk[1:6]) AS term
-           FROM dt WHERE doc_id % 97 = 0),
-         tok AS (SELECT doc_id, len(tk)::DOUBLE AS dl, unnest(tk) AS term
-           FROM dt),
-         tfr AS (SELECT doc_id, dl, term, count(*)::DOUBLE AS tf FROM tok
-           WHERE term IN (SELECT term FROM qt) GROUP BY 1, 2, 3),
-         dfr AS (SELECT term, count(*)::DOUBLE AS df FROM tfr GROUP BY 1),
-         sc AS (SELECT q.query_id, t.doc_id,
-             round(sum(ln(1 + (st.n - f.df + 0.5) / (f.df + 0.5)) * t.tf
-               * (1.2 + 1) / (t.tf + 1.2 * (1 - 0.75 + 0.75 * t.dl / st.avgdl))),
-               4) AS score
-           FROM qt q JOIN tfr t USING (term) JOIN dfr f USING (term)
-           CROSS JOIN st GROUP BY 1, 2),
-         r AS (SELECT query_id, doc_id, score, row_number() OVER (
-             PARTITION BY query_id ORDER BY score DESC, doc_id) AS rank
-           FROM sc)
-         SELECT query_id, rank::BIGINT AS rank, doc_id, score FROM r
-         WHERE rank <= 10 ORDER BY query_id, rank""",
+      bm25CorpusOracleSql,
     // w41: w37's fused oracle over both corpora MINUS the victims, where
     // the victims are DERIVED exactly as the gate derives them — the ivf
     // rank-1 neighbor (cell-probed, self-excluded, cos DESC / id ties)
@@ -8878,115 +8391,19 @@ object SparkEntry {
     // replay as if the forget never happened; the gate's mid-state
     // requires pin the OTHER half of the contract (the default restore
     // keeps the victim masked)
-    "w44_forget_ledger" ->
-      """WITH dt AS (SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-               x -> length(x) > 0) AS tk
-           FROM documents),
-         st AS (SELECT count(*)::DOUBLE AS n, avg(len(tk)::DOUBLE) AS avgdl
-           FROM dt),
-         qt AS (SELECT DISTINCT doc_id AS query_id, unnest(tk[1:6]) AS term
-           FROM dt WHERE doc_id % 97 = 0),
-         tok AS (SELECT doc_id, len(tk)::DOUBLE AS dl, unnest(tk) AS term
-           FROM dt),
-         tfr AS (SELECT doc_id, dl, term, count(*)::DOUBLE AS tf FROM tok
-           WHERE term IN (SELECT term FROM qt) GROUP BY 1, 2, 3),
-         dfr AS (SELECT term, count(*)::DOUBLE AS df FROM tfr GROUP BY 1),
-         sc AS (SELECT q.query_id, t.doc_id,
-             round(sum(ln(1 + (st.n - f.df + 0.5) / (f.df + 0.5)) * t.tf
-               * (1.2 + 1) / (t.tf + 1.2 * (1 - 0.75 + 0.75 * t.dl / st.avgdl))),
-               4) AS score
-           FROM qt q JOIN tfr t USING (term) JOIN dfr f USING (term)
-           CROSS JOIN st GROUP BY 1, 2),
-         r AS (SELECT query_id, doc_id, score, row_number() OVER (
-             PARTITION BY query_id ORDER BY score DESC, doc_id) AS rank
-           FROM sc)
-         SELECT query_id, rank::BIGINT AS rank, doc_id, score FROM r
-         WHERE rank <= 10 ORDER BY query_id, rank""",
+    "w44_forget_ledger" -> bm25CorpusOracleSql,
     // w45: w27's full-corpus oracle VERBATIM — the incremental
     // snapshot's restore resolves bytes from BOTH data dirs (the base's
     // unchanged epochs by pointer, its own delta by copy) and must
     // replay exactly as the live three-epoch store did pre-damage
-    "w45_incremental_snapshot" ->
-      """WITH dt AS (SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-               x -> length(x) > 0) AS tk
-           FROM documents),
-         st AS (SELECT count(*)::DOUBLE AS n, avg(len(tk)::DOUBLE) AS avgdl
-           FROM dt),
-         qt AS (SELECT DISTINCT doc_id AS query_id, unnest(tk[1:6]) AS term
-           FROM dt WHERE doc_id % 97 = 0),
-         tok AS (SELECT doc_id, len(tk)::DOUBLE AS dl, unnest(tk) AS term
-           FROM dt),
-         tfr AS (SELECT doc_id, dl, term, count(*)::DOUBLE AS tf FROM tok
-           WHERE term IN (SELECT term FROM qt) GROUP BY 1, 2, 3),
-         dfr AS (SELECT term, count(*)::DOUBLE AS df FROM tfr GROUP BY 1),
-         sc AS (SELECT q.query_id, t.doc_id,
-             round(sum(ln(1 + (st.n - f.df + 0.5) / (f.df + 0.5)) * t.tf
-               * (1.2 + 1) / (t.tf + 1.2 * (1 - 0.75 + 0.75 * t.dl / st.avgdl))),
-               4) AS score
-           FROM qt q JOIN tfr t USING (term) JOIN dfr f USING (term)
-           CROSS JOIN st GROUP BY 1, 2),
-         r AS (SELECT query_id, doc_id, score, row_number() OVER (
-             PARTITION BY query_id ORDER BY score DESC, doc_id) AS rank
-           FROM sc)
-         SELECT query_id, rank::BIGINT AS rank, doc_id, score FROM r
-         WHERE rank <= 10 ORDER BY query_id, rank""",
+    "w45_incremental_snapshot" -> bm25CorpusOracleSql,
     // w42: w27's full-corpus oracle VERBATIM — the restore (with the
     // explicit --resurrect of the fat-fingered forget; the default
     // restore re-applies the ledgered delete — w44's gate) must return
     // the store to its exact pre-damage state, so the post-restore
     // search replays as if the forget+compact never happened
-    "w42_snapshot_restore" ->
-      """WITH dt AS (SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-               x -> length(x) > 0) AS tk
-           FROM documents),
-         st AS (SELECT count(*)::DOUBLE AS n, avg(len(tk)::DOUBLE) AS avgdl
-           FROM dt),
-         qt AS (SELECT DISTINCT doc_id AS query_id, unnest(tk[1:6]) AS term
-           FROM dt WHERE doc_id % 97 = 0),
-         tok AS (SELECT doc_id, len(tk)::DOUBLE AS dl, unnest(tk) AS term
-           FROM dt),
-         tfr AS (SELECT doc_id, dl, term, count(*)::DOUBLE AS tf FROM tok
-           WHERE term IN (SELECT term FROM qt) GROUP BY 1, 2, 3),
-         dfr AS (SELECT term, count(*)::DOUBLE AS df FROM tfr GROUP BY 1),
-         sc AS (SELECT q.query_id, t.doc_id,
-             round(sum(ln(1 + (st.n - f.df + 0.5) / (f.df + 0.5)) * t.tf
-               * (1.2 + 1) / (t.tf + 1.2 * (1 - 0.75 + 0.75 * t.dl / st.avgdl))),
-               4) AS score
-           FROM qt q JOIN tfr t USING (term) JOIN dfr f USING (term)
-           CROSS JOIN st GROUP BY 1, 2),
-         r AS (SELECT query_id, doc_id, score, row_number() OVER (
-             PARTITION BY query_id ORDER BY score DESC, doc_id) AS rank
-           FROM sc)
-         SELECT query_id, rank::BIGINT AS rank, doc_id, score FROM r
-         WHERE rank <= 10 ORDER BY query_id, rank""",
-    "w27_stream_bm25" ->
-      """WITH dt AS (SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-               x -> length(x) > 0) AS tk
-           FROM documents),
-         st AS (SELECT count(*)::DOUBLE AS n, avg(len(tk)::DOUBLE) AS avgdl
-           FROM dt),
-         qt AS (SELECT DISTINCT doc_id AS query_id, unnest(tk[1:6]) AS term
-           FROM dt WHERE doc_id % 97 = 0),
-         tok AS (SELECT doc_id, len(tk)::DOUBLE AS dl, unnest(tk) AS term
-           FROM dt),
-         tfr AS (SELECT doc_id, dl, term, count(*)::DOUBLE AS tf FROM tok
-           WHERE term IN (SELECT term FROM qt) GROUP BY 1, 2, 3),
-         dfr AS (SELECT term, count(*)::DOUBLE AS df FROM tfr GROUP BY 1),
-         sc AS (SELECT q.query_id, t.doc_id,
-             round(sum(ln(1 + (st.n - f.df + 0.5) / (f.df + 0.5)) * t.tf
-               * (1.2 + 1) / (t.tf + 1.2 * (1 - 0.75 + 0.75 * t.dl / st.avgdl))),
-               4) AS score
-           FROM qt q JOIN tfr t USING (term) JOIN dfr f USING (term)
-           CROSS JOIN st GROUP BY 1, 2),
-         r AS (SELECT query_id, doc_id, score, row_number() OVER (
-             PARTITION BY query_id ORDER BY score DESC, doc_id) AS rank
-           FROM sc)
-         SELECT query_id, rank::BIGINT AS rank, doc_id, score FROM r
-         WHERE rank <= 10 ORDER BY query_id, rank""",
+    "w42_snapshot_restore" -> bm25CorpusOracleSql,
+    "w27_stream_bm25" -> bm25CorpusOracleSql,
     "e31_rrf_hybrid" ->
       """WITH dt AS (SELECT doc_id,
              list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
@@ -9597,21 +9014,7 @@ object SparkEntry {
            SELECT 'packed', doc_id, count(*)::BIGINT, sum(vid)::BIGINT, 0.0
              FROM penc GROUP BY doc_id)
          ORDER BY family, k1, k2, k3""",
-    "w28_stream_packed" ->
-      """WITH t AS (SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-               x -> length(x) > 0) AS toks FROM documents),
-         exp AS (SELECT doc_id, unnest(toks) AS token,
-             unnest(range(1, len(toks)+1)) AS pos FROM t WHERE len(toks) > 0),
-         cnts AS (SELECT token, count(*) AS cnt FROM exp GROUP BY 1),
-         vocab AS (SELECT token, vid FROM (
-             SELECT token, (row_number() OVER (ORDER BY cnt DESC, token) - 1)::BIGINT AS vid
-             FROM cnts) WHERE vid < 256),
-         enc AS (SELECT e.doc_id, COALESCE(v.vid, -1)::BIGINT AS vid
-             FROM exp e LEFT JOIN vocab v USING (token))
-         SELECT doc_id, count(*)::BIGINT AS n_tokens,
-           sum(vid)::BIGINT AS sum_ids
-         FROM enc GROUP BY doc_id ORDER BY doc_id""",
+    "w28_stream_packed" -> packedRoundtripOracleSql,
     // w35: s22's vocab/encode replay over the docs MINUS the tombstoned
     // ids — the post-compaction export must read as if they never landed
     // (vocab still builds over ALL docs: deletes happen after encoding)
@@ -9633,21 +9036,7 @@ object SparkEntry {
          GROUP BY doc_id ORDER BY doc_id""",
     // s22: d23's vocab/encode chain, reduced to the two integrals the
     // binary roundtrip must reproduce (count and sum of ids per doc)
-    "s22_packed_roundtrip" ->
-      """WITH t AS (SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-               x -> length(x) > 0) AS toks FROM documents),
-         exp AS (SELECT doc_id, unnest(toks) AS token,
-             unnest(range(1, len(toks)+1)) AS pos FROM t WHERE len(toks) > 0),
-         cnts AS (SELECT token, count(*) AS cnt FROM exp GROUP BY 1),
-         vocab AS (SELECT token, vid FROM (
-             SELECT token, (row_number() OVER (ORDER BY cnt DESC, token) - 1)::BIGINT AS vid
-             FROM cnts) WHERE vid < 256),
-         enc AS (SELECT e.doc_id, COALESCE(v.vid, -1)::BIGINT AS vid
-             FROM exp e LEFT JOIN vocab v USING (token))
-         SELECT doc_id, count(*)::BIGINT AS n_tokens,
-           sum(vid)::BIGINT AS sum_ids
-         FROM enc GROUP BY doc_id ORDER BY doc_id""",
+    "s22_packed_roundtrip" -> packedRoundtripOracleSql,
     "s21_rotation_replay" ->
       """SELECT doc_id, 1::BIGINT AS n_copies, length(text)::BIGINT AS n_chars
          FROM documents ORDER BY doc_id""",

@@ -228,7 +228,18 @@ object Dedup {
     * on both join build sides — at 100 TB that is two full shingle passes
     * to verify a handful of pairs). Candidates are persisted because the
     * id-set derivation and the verify join both read them; the relation is
-    * pair-count-sized. */
+    * pair-count-sized.
+    *
+    * EAGER: the call runs the verify join and returns a
+    * `localCheckpoint(true)` of the pairs, so the shingle and candidate
+    * caches can be released before it returns. The tradeoffs, shared by
+    * [[sketchQualityPairs]] and [[containmentPairs]]: a caller's later
+    * filter or projection no longer prunes the pair join (the whole pair
+    * set materializes even if the caller never reads it), and the
+    * checkpoint blocks are not replicated — losing the executor that holds
+    * them fails the consuming job instead of recomputing the lineage.
+    * Fine for a local or fixed-executor run; under dynamic allocation or
+    * spot executors, consume the result promptly. */
   def ngramJaccardPairs(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id",
       shingleN: Int = 3, threshold: Double = 0.5): DataFrame = {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK

@@ -16,10 +16,14 @@ package graft.operators
   * job) that dominates these gates at test scale and any many-small-epoch
   * maintenance window at production scale.
   *
-  * WITHIN one store the steps stay sequential — epoch writes publish a
-  * per-store write-intent marker and first-epoch metadata creation
-  * (`_NBUCKETS`) is exclusive-create — so callers pass one thunk per
-  * store, never two thunks touching the same root.
+  * Thunks may also share one store root, under a single invariant:
+  * disjoint-epoch writes to one root may overlap once the store's
+  * metadata exists, while seeding (the first epoch, whose `_NBUCKETS`
+  * metadata is exclusive-create, or an IVF `init`) and maintenance
+  * (compact, refit, rebucket, forget, snapshot, restore) are serialized.
+  * Each epoch write publishes its own write-intent marker and writes its
+  * own `epoch=<n>` directory. [[graft.StoreGate.build]] is the one place
+  * the gates apply this.
   *
   * Failure surface matches the sequential form: every chain is joined,
   * the first failure rethrows (later ones ride as suppressed) — no

@@ -317,11 +317,13 @@ case class CenteredProjectExpr(child: Expression,
   * element_at(t, c + 1)), 0.0, acc + x)` — interpreted per element with
   * InternalRow boxing, paid once per (query, probed-cell candidate row),
   * the exact pattern CenteredProjectExpr killed one hop upstream (round
-  * 16). Semantics match it exactly: left-to-right accumulation from 0.0
-  * (bit-identical); a null element or a length mismatch (zip_with pads
-  * the shorter side with null, which null-propagates through the sum)
-  * yields null; an out-of-range code throws loudly (ANSI element_at's
-  * behavior). */
+  * 16). For in-range codes the semantics match it exactly: left-to-right
+  * accumulation from 0.0 (bit-identical); a null element or a length
+  * mismatch (zip_with pads the shorter side with null, which
+  * null-propagates through the sum) yields null. An out-of-range code
+  * deliberately diverges: it throws loudly, where the HOF form under the
+  * default non-ANSI config returns null (valid PQ codes never reach this
+  * case). */
 case class AdcSumExpr(left: Expression, right: Expression)
     extends BinaryExpression with CodegenFallback {
   override def dataType: DataType = DoubleType

@@ -234,15 +234,18 @@ class TailMicroBatchStream(dir: String, format: String, maxBytesPerTrigger: Opti
       val take = math.min(len - startOff, budget).max(0L)
       // a capped range must end on a RECORD boundary or the split record
       // would be emitted twice (fragment now, full line next trigger);
-      // EOF is a boundary by the record-atomic-append assumption — EXCEPT
-      // for multiline records, whose final record is only complete once the
-      // NEXT record starts (reference: TextMessageReader.java:120-125), so
-      // multiline always aligns, even at EOF
+      // for text, EOF is a boundary by the record-atomic-append assumption.
+      // Multiline records always align, even at EOF: the final record is
+      // only complete once the NEXT record starts (reference:
+      // TextMessageReader.java:120-125). Thrift aligns at EOF too: a
+      // listing can land inside a frame write, and committing that
+      // mid-frame length would resume the next batch inside the frame and
+      // lose the rest of the file
       val end =
         if (take == 0L) startOff
         else if (format == "multiline")
           alignToMultilineBoundary(path, startOff, startOff + take, len)
-        else if (startOff + take >= len) startOff + take
+        else if (startOff + take >= len && format != "thrift") startOff + take
         else alignToRecordBoundary(path, startOff, startOff + take, len)
       budget -= (end - startOff).max(0L)
       out += id -> end
@@ -274,20 +277,26 @@ class TailMicroBatchStream(dir: String, format: String, maxBytesPerTrigger: Opti
 
   /** Largest record boundary in (startOff, cappedEnd]; if a single record
     * exceeds the budget, extends FORWARD past the cap to the next boundary
-    * so the stream always makes progress. Driver-side IO bounded by the
-    * trigger budget (and only runs for rate-capped files). */
+    * so the stream always makes progress. The IO is bounded by the
+    * trigger budget: text runs it only for rate-capped files, thrift for
+    * every range (one 4-byte positional read per frame header). */
   private def alignToRecordBoundary(path: String, startOff: Long, cappedEnd: Long,
       fileLen: Long): Long = {
     val raf = new RandomAccessFile(path, "r")
     try {
       if (format == "thrift") {
         // walk 4-byte frame-length headers forward from startOff
+        val ch = raf.getChannel
+        val header = java.nio.ByteBuffer.allocate(4)
         var pos = startOff
         var lastBoundary = startOff
         var grown = false
         while (pos + 4 <= fileLen && (pos < cappedEnd || !grown)) {
-          raf.seek(pos)
-          val len = raf.readInt()
+          header.clear()
+          while (header.hasRemaining &&
+            ch.read(header, pos + header.position()) >= 0) ()
+          if (header.hasRemaining) return lastBoundary // shrank since listing
+          val len = header.getInt(0)
           if (len < 0 || pos + 4 + len > fileLen) return lastBoundary // partial tail
           pos += 4 + len
           if (pos <= cappedEnd) lastBoundary = pos

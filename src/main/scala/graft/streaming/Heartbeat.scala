@@ -6,6 +6,8 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryListener._
 
+import graft.Json
+
 /** Heartbeat side-channel: periodic engine-status JSON, mirroring the
   * reference's `SingerStatus` heartbeat
   * (reference: common/SingerStatus.java:63-93,
@@ -16,18 +18,16 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
   */
 class HeartbeatListener(emit: String => Unit) extends StreamingQueryListener {
 
-  private def esc(s: String): String = s.replace("\\", "\\\\").replace("\"", "\\\"")
-
   override def onQueryStarted(event: QueryStartedEvent): Unit =
-    emit(s"""{"event":"started","name":"${esc(Option(event.name).getOrElse(""))}","id":"${event.id}","timestamp":"${esc(event.timestamp)}","hostname":"${esc(LogPipeline.hostname)}"}""")
+    emit(s"""{"event":"started","name":${Json.str(Option(event.name).getOrElse(""))},"id":"${event.id}","timestamp":${Json.str(event.timestamp)},"hostname":${Json.str(LogPipeline.hostname)}}""")
 
   override def onQueryProgress(event: QueryProgressEvent): Unit = {
     val p = event.progress
-    emit(s"""{"event":"progress","name":"${esc(Option(p.name).getOrElse(""))}","id":"${p.id}","batchId":${p.batchId},"timestamp":"${esc(p.timestamp)}","numInputRows":${p.numInputRows},"inputRowsPerSecond":${nz(p.inputRowsPerSecond)},"processedRowsPerSecond":${nz(p.processedRowsPerSecond)},"hostname":"${esc(LogPipeline.hostname)}"}""")
+    emit(s"""{"event":"progress","name":${Json.str(Option(p.name).getOrElse(""))},"id":"${p.id}","batchId":${p.batchId},"timestamp":${Json.str(p.timestamp)},"numInputRows":${p.numInputRows},"inputRowsPerSecond":${nz(p.inputRowsPerSecond)},"processedRowsPerSecond":${nz(p.processedRowsPerSecond)},"hostname":${Json.str(LogPipeline.hostname)}}""")
   }
 
   override def onQueryTerminated(event: QueryTerminatedEvent): Unit =
-    emit(s"""{"event":"terminated","id":"${event.id}","exception":${event.exception.map(e => "\"" + esc(e) + "\"").getOrElse("null")}}""")
+    emit(s"""{"event":"terminated","id":"${event.id}","exception":${event.exception.map(Json.str).getOrElse("null")}}""")
 
   private def nz(d: Double): String = if (d.isNaN || d.isInfinite) "0.0" else d.toString
 }

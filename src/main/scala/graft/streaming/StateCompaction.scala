@@ -291,8 +291,8 @@ object StateCompaction {
     }
   }
 
-  private def stagingPath(dir: String) = new Path(dir + ".compacting")
-  private def markerPath(dir: String) = new Path(dir + ".compacting.COMMITTED")
+  private[graft] def stagingPath(dir: String) = new Path(dir + ".compacting")
+  private[graft] def markerPath(dir: String) = new Path(dir + ".compacting.COMMITTED")
 
   private def fileSystem(spark: SparkSession, dir: String): FileSystem =
     FileSystem.get(new URI(dir), spark.sessionState.newHadoopConf())

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import graft.Json
+
 /** Engine status snapshot — the reference's `SingerStatus` heartbeat body
   * (reference: common/SingerStatus.java:63-93: version, hostname,
   * jvmUptime, timestamp, numLogStreams, numStuckLogStreams, per-topic
@@ -21,8 +23,6 @@ class StatusReporter(mgr: PipelineManager, version: String = "graft-0.1",
 
   private val startedAtMs = System.currentTimeMillis()
 
-  private def esc(s: String): String = StatusReporter.esc(s)
-
   def statusJson(nowMs: Long = System.currentTimeMillis()): String = {
     val active = mgr.active
     val stuck = mgr.stuck(nowMs)
@@ -40,10 +40,10 @@ class StatusReporter(mgr: PipelineManager, version: String = "graft-0.1",
       // somewhere).
       val lateDropped = p.map(_.stateOperators.map(_.numRowsDroppedByWatermark).sum)
         .getOrElse(0L)
-      s""""${esc(name)}":{"batchId":$batchId,"numInputRows":$rows,""" +
+      s"""${Json.str(name)}:{"batchId":$batchId,"numInputRows":$rows,""" +
         s""""processedRowsPerSecond":$rps,"numRowsDroppedByWatermark":$lateDropped}"""
     }.mkString("{", ",", "}")
-    s"""{"version":"${esc(version)}","hostname":"${esc(LogPipeline.hostname)}",""" +
+    s"""{"version":${Json.str(version)},"hostname":${Json.str(LogPipeline.hostname)},""" +
       s""""uptimeMs":${nowMs - startedAtMs},"timestamp":$nowMs,""" +
       s""""numPipelines":${active.size},"numStuckPipelines":${stuck.size},""" +
       s""""pipelines":$perPipeline""" +
@@ -69,21 +69,16 @@ class StatusReporter(mgr: PipelineManager, version: String = "graft-0.1",
             breakStale = false).size
           MaintenanceLease.status(s, root) match {
             case Some(st) =>
-              s""""lease":true,"op":"${esc(st.op)}","acquiredAtMs":${st.acquiredAtMs},""" +
-                s""""renewedAgeMs":${st.renewedAgeMs},"host":"${esc(st.host)}",""" +
+              s""""lease":true,"op":${Json.str(st.op)},"acquiredAtMs":${st.acquiredAtMs},""" +
+                s""""renewedAgeMs":${st.renewedAgeMs},"host":${Json.str(st.host)},""" +
                 s""""intents":$intents"""
             case None => s""""lease":false,"intents":$intents"""
           }
         } catch {
           case e: Exception =>
-            s""""error":"${esc(Option(e.getMessage).getOrElse(e.getClass.getSimpleName))}""""
+            s""""error":${Json.str(Option(e.getMessage).getOrElse(e.getClass.getSimpleName))}"""
         }
-      s""""${esc(name)}":{$body}"""
+      s"""${Json.str(name)}:{$body}"""
     }.mkString("{", ",", "}")
   }
-}
-
-object StatusReporter {
-  private[streaming] def esc(s: String): String =
-    s.replace("\\", "\\\\").replace("\"", "\\\"")
 }

@@ -34,11 +34,6 @@ object StreamingIvf {
   def init(centroids: DataFrame, path: String): Unit =
     centroids.coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
 
-  /** Cell-route one epoch's vectors and overwrite its epoch directory —
-    * idempotent under foreachBatch replay. `payloadCols` ride along into
-    * the at-rest layout (label/source/quality metadata) so probes can
-    * filter on them without a join back to the source table — the
-    * filtered-ANN-at-rest shape ([[hardNegativeSearch]]). */
   /** Driver-side handle to the store's frozen quantizer. Collect ONCE
     * per maintenance/probe RUN and pass it to [[appendEpoch]] /
     * [[search]] / [[filteredSearch]] via `centsOpt` — each call
@@ -49,6 +44,11 @@ object StreamingIvf {
   def centroids(spark: SparkSession, path: String): Seq[(Int, Array[Double])] =
     Similarity.collectCentroids(spark.read.parquet(s"$path/centroids"))
 
+  /** Cell-route one epoch's vectors and overwrite its epoch directory —
+    * idempotent under foreachBatch replay. `payloadCols` ride along into
+    * the at-rest layout (label/source/quality metadata) so probes can
+    * filter on them without a join back to the source table — the
+    * filtered-ANN-at-rest shape ([[hardNegativeSearch]]). */
   def appendEpoch(batch: DataFrame, path: String, epoch: Long,
       vecCol: String = "embedding", idCol: String = "vec_id",
       payloadCols: Seq[String] = Nil,

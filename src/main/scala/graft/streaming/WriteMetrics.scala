@@ -4,6 +4,8 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
+import graft.Json
+
 /** Write-path metrics parity with the reference's per-task accounting
   * (reference: writer/KafkaWritingTask.java:71-141 — WRITER_BATCH_SIZE per
   * topic, bytesWritten summed from record metadata, one end-to-end write
@@ -77,7 +79,7 @@ class WriteMetricsRegistry {
   /** JSON fragments for [[StatusReporter]]. */
   private[streaming] def pipelinesJson: String =
     pipelines.toSeq.sortBy(_._1).map { case (name, w) =>
-      s""""${StatusReporter.esc(name)}":{"batches":${w.batches},""" +
+      s"""${Json.str(name)}:{"batches":${w.batches},""" +
         s""""messages":${w.messages},"bytes":${w.bytes},""" +
         s""""failures":${w.failures},"lastLatencyMs":${w.lastLatencyMs},""" +
         s""""maxLatencyMs":${w.maxLatencyMs}}"""
@@ -87,7 +89,7 @@ class WriteMetricsRegistry {
     brokers.toSeq.sortBy(_._1).map { case ((name, broker), w) =>
       val avg = if (w.successes + w.failures == 0) 0L
         else w.latencySumMs / (w.successes + w.failures)
-      s""""${StatusReporter.esc(s"$name@$broker")}":{"successes":${w.successes},""" +
+      s"""${Json.str(s"$name@$broker")}:{"successes":${w.successes},""" +
         s""""failures":${w.failures},"avgLatencyMs":$avg,""" +
         s""""maxLatencyMs":${w.latencyMaxMs}}"""
     }.mkString("{", ",", "}")

@@ -289,6 +289,27 @@ class HarnessGateSpec extends AnyFunSuite with SparkTestBase {
       s"auto-detect must flag exactly the job-running eager builder: $caught")
   }
 
+  // ------------------------------------------------- store-gate clean roots
+
+  test("store gates start from a clean root: a killed run's marker and held lease change no row") {
+    val sfDir = new java.io.File(sys.props("user.home"), "testdata/sf0.001").getPath
+    assume(new java.io.File(sfDir).isDirectory, "testdata not present")
+    // w27 cleared nothing before the fixture; w35 cleared its root and
+    // staging siblings but not the lease
+    Seq("w27_stream_bm25" -> "w27_bm25", "w35_packed_tombstones" -> "w35_ptomb")
+      .foreach { case (gate, tag) =>
+        def rows() = SparkEntry.queries(gate)(spark, sfDir).collect().toSeq
+        val clean = rows()
+        val root = StoreGate.root(tag, sfDir)
+        // a killed run's debris: an orphan compaction commit marker and a
+        // maintenance lease its holder never released
+        Files.write(java.nio.file.Paths.get(
+          graft.streaming.StateCompaction.markerPath(root).toString), Array.emptyByteArray)
+        graft.streaming.MaintenanceLease.acquire(spark, root)
+        assert(rows() == clean, s"$gate over a dirty root")
+      }
+  }
+
   // ------------------------------------------------- events ts adaptivity
 
   test("SparkEntry.events normalizes BIGINT-nanos and timestamp[us] ts identically") {

@@ -126,6 +126,48 @@ class TailSourceSpec extends AnyFunSuite with SparkTestBase {
     } finally q.stop()
   }
 
+  test("a batch listed inside a thrift frame write commits no mid-frame offset") {
+    // 500 whole frames plus the head of a 501st, one batch, then the rest
+    // of that frame and 500 more, a second batch on the same checkpoint.
+    // The split byte reads as a negative frame length, so a batch that
+    // resumed there would stop and lose every later record.
+    val dir = tempDir()
+    val out = tempDir().resolve("out")
+    val cp = tempDir()
+    val msgs = (0 to 1000).map(i => s"m-$i-".getBytes("UTF-8") ++ Array(0xFF, 0x80).map(_.toByte))
+    val frames = msgs.zipWithIndex.map { case (m, i) =>
+      ThriftLogCodec.encodeFrame(null, m, Some(i.toLong), None)
+    }
+    val half = frames(500)
+    val cut = (8 until half.length).find(half(_) < 0).get
+    def batch(): Unit = {
+      val q = spark.readStream.format("graft-tail")
+        .option("path", dir.toString).option("format", "thrift")
+        .load()
+        .writeStream.format("parquet").option("path", out.toString)
+        .option("checkpointLocation", cp.toString)
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+    }
+    val log = java.nio.channels.FileChannel.open(dir.resolve("t.log"),
+      StandardOpenOption.CREATE, StandardOpenOption.WRITE)
+    try {
+      frames.take(500).foreach(f => log.write(java.nio.ByteBuffer.wrap(f)))
+      log.write(java.nio.ByteBuffer.wrap(half, 0, cut))
+      batch()
+      log.write(java.nio.ByteBuffer.wrap(half, cut, half.length - cut))
+      frames.drop(501).foreach(f => log.write(java.nio.ByteBuffer.wrap(f)))
+      batch()
+    } finally log.close()
+    val got = spark.read.parquet(out.toString).collect()
+      .map(r => new String(r.getAs[Array[Byte]]("value"), "ISO-8859-1")).toSeq
+    val want = msgs.map(m => new String(m, "ISO-8859-1"))
+    val (delivered, distinct) = (got.size, got.distinct.size)
+    assert(delivered == 1001 && distinct == 1001,
+      s"$delivered records delivered, $distinct distinct, of 1001")
+    assert(got.toSet == want.toSet)
+  }
+
   test("multiline tail: record emits only once its successor starts") {
     val dir = tempDir()
     val f = dir.resolve("g.log")
